@@ -3371,9 +3371,7 @@ def q_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
             "item_b as src", "item_a as dst", "n_baskets as weight"
         )
     )
-    return pagerank_weighted_integer(
-        edges, iterations=8, assume_no_dangling=True
-    )
+    return pagerank_weighted_integer(edges, iterations=8)
 
 
 def q_split_leaks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3416,9 +3414,7 @@ def q_pagerank_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("node")
         .limit(5)
     )
-    return pagerank_personalized_integer(
-        edges, seeds, iterations=8, assume_no_dangling=True
-    )
+    return pagerank_personalized_integer(edges, seeds, iterations=8)
 
 
 def q_coverage_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -14515,8 +14511,7 @@ def q_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.selectExpr("item_a as src", "item_b as dst").unionAll(
         pairs.selectExpr("item_b as src", "item_a as dst")
     )
-    # symmetrized graph: every node has out-edges by construction
-    return pagerank_integer(edges, iterations=8, assume_no_dangling=True)
+    return pagerank_integer(edges, iterations=8)
 
 
 def q_hashed_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:

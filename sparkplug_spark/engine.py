@@ -8,11 +8,15 @@ native Column expressions — NO SQL-string codegen, NO temp views, NO UDFs:
   reference's single generated ``select``, ``SparkPlug.scala:98-107``);
 - rules fold sequentially, so rule k+1 observes rule k's writes
   (``SparkPlug.scala:42-50``);
-- Catalyst's ``CollapseProject`` fuses the whole rule chain into ONE
-  codegen'd projection — a narrow, shuffle-free map that scales linearly
-  to 100 TB (the reference needed checkpoint cadence because per-rule temp
-  views + UDF boundaries defeated fusion; we keep the cadence only as an
-  opt-in knob for 100+-rule chains, ``SparkPlug.scala:109-125``);
+- the rule chain runs as a narrow, shuffle-free chain of projections in
+  one codegen stage.  Catalyst's ``CollapseProject`` merges consecutive
+  rules only while no rule reads an earlier rule's write more than once:
+  25 rules that each test and rewrite one column optimize to 26
+  ``Project`` nodes, and with plug details on every rule keeps its own
+  (each appends to the details column).  The reference needed checkpoint
+  cadence because per-rule temp views + UDF boundaries defeated fusion;
+  the cadence stays an opt-in knob for long chains
+  (``SparkPlug.scala:109-125``);
 - plug-details audit appends via ``concat(details, array(struct(...)))``
   gated on ``condition AND any value actually changed`` using null-safe
   equality (``PlugRule.scala:49-77``, ``SparkPlugUDFs.scala:14-31``);
@@ -73,9 +77,11 @@ class PlugRuleValidationException(Exception):
 @dataclass(frozen=True)
 class CheckpointConfig:
     """Lineage-control cadence (reference ``SparkPlugCheckpointDetails``,
-    ``SparkPlug.scala:14``, ``:109-125``).  Rarely needed here because the
-    fused rule chain collapses to one projection, but kept for very long
-    rule pipelines at large scale."""
+    ``SparkPlug.scala:14``, ``:109-125``).  The rule chain stays
+    shuffle-free, but a rule that reads an earlier rule's write more than
+    once (and every rule when plug details are on) adds one ``Project`` to
+    the plan, so very long rule pipelines at large scale can cut lineage
+    with this cadence."""
 
     checkpoint_dir: str
     rules_per_stage: int

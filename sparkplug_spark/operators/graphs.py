@@ -59,8 +59,9 @@ _SCC_CHAIN = 2
 #: sf0.1, and at scale the W build is an edge-sized pass traded for
 #: node-sized checkpoint writes, a net loss.  Both loops therefore keep
 #: ONE eager checkpoint per iteration wherever a scalar must feed
-#: forward (dangling mass / L1 total) and lazy `checkpoint_every`
-#: chaining where none does.
+#: forward (dangling mass / L1 total) and lazy chaining where none
+#: does (`checkpoint_every` in the float tiers, `_RANK_CHECKPOINT_EVERY`
+#: in the integer PageRank tiers).
 
 __all__ = [
     "pagerank",
@@ -699,6 +700,203 @@ def hits(
         )
 
 
+#: lazy rank steps chained per checkpoint by the integer PageRank tiers
+#: when no node dangles (dangling mass forces one eager checkpoint per
+#: step: see :func:`_rank_nano`)
+_RANK_CHECKPOINT_EVERY = 3
+
+
+def _canonical_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """(src, dst) projection of ``edges`` with null endpoints dropped and
+    duplicate pairs collapsed: the canonical edge table the integer rank
+    tiers, :func:`hits_integer` and the :func:`fold_edges` store share."""
+    return (
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        .dropDuplicates(["src", "dst"])
+    )
+
+
+def _rank_nano(
+    e: DataFrame,
+    iterations: int,
+    damping_pct: int,
+    unit: int,
+    seeds: DataFrame | None = None,
+    init_ranks: DataFrame | None = None,
+) -> DataFrame:
+    """The one integer PageRank loop behind :func:`pagerank_integer`,
+    :func:`pagerank_personalized_integer` and
+    :func:`pagerank_weighted_integer`.
+
+    ``e`` is a canonical (src, dst) table with an optional column ``w``
+    of positive BIGINT weights (absent: every weight is 1);
+    ``seeds`` (node) receives the teleport and dangling mass, and
+    ``None`` makes every node a seed.  Two exact integer identities let
+    the three tiers share this loop without a branch:
+
+    - plain = personalized with every node a seed:
+      ``floor(floor((100-d)·n·unit/100)/n) == floor((100-d)·unit/100)``,
+      the init share ``n·unit // n == unit`` and ``ds = dm // n``;
+    - unweighted = weighted with ``w = 1``: ``Σw_out == outdeg``, so
+      ``rank·1 div Σw_out == rank div outdeg``.
+
+    Every preflight fact (node and seed counts, dangling count, edge
+    count, max weight, and the warm start's initial dangling mass) comes
+    from ONE aggregate over a node-sized table.  Per iteration: the
+    node-sized rank table joins the src-partitioned persisted edge table
+    and aggregates on dst (two exchanges).  With dangling nodes their
+    mass total rides each checkpoint action as an ``observe`` metric and
+    enters the next step as an int literal, which forces one checkpoint
+    per step: the r11 chain A/B measured the alternative (inner steps
+    taking the mass from a broadcast 1-row aggregate over the lazy
+    previous step) and it LOST (pagerank_incremental 11.1 s → 12.6 s at
+    chain 2, 15.9 s at chain 3, jobs 101 → 122 → 157), because AQE does
+    not stage-cache-reuse the aggregate's subtree and every inner step
+    re-executed the edge join.  Unlike HITS, the dangling sum needs the
+    per-node floor of the incoming mass, so no node-sized identity
+    exists.  Without dangling nodes, steps chain lazily
+    ``_RANK_CHECKPOINT_EVERY`` per checkpoint."""
+    if not (0 < damping_pct < 100):
+        raise ValueError("damping_pct must be in (0, 100)")
+    d, unit = int(damping_pct), int(unit)
+    spark = e.sparkSession
+    # no weight column = every weight 1: the edge table keeps the caller's
+    # plan, so a caller-cached canonical store is reused, not copied (and
+    # is released with the working set on exit)
+    w = F.col("w") if "w" in e.columns else F.lit(1).cast("long")
+    e = e.persist()
+    ends = e.select(F.col("src").alias("node")).unionByName(
+        e.select(F.col("dst").alias("node"))
+    ).select("node", F.lit(seeds is None).alias("__s"))
+    if seeds is not None:
+        ends = ends.unionByName(seeds.select("node", F.lit(True).alias("__s")))
+    outw = e.groupBy(F.col("src").alias("node")).agg(
+        F.sum(w).alias("outw"),
+        F.count(F.lit(1)).alias("__od"),
+        F.max(w).alias("__mw"),
+    )
+    marked0 = ends.groupBy("node").agg(F.max("__s").alias("__s")).join(
+        outw, "node", "left"
+    )
+    if init_ranks is None:
+        marked0 = marked0.withColumn("__init", F.lit(None).cast("long"))
+    else:
+        marked0 = marked0.join(
+            init_ranks.select("node", F.col("rank_nano").alias("__init")),
+            "node",
+            "left",
+        )
+    marked0 = marked0.withColumn("__dang", F.col("outw").isNull()).persist()
+    cached = [e, marked0]
+    try:
+        dang, is_seed = F.col("__dang"), F.col("__s")
+        st = marked0.agg(
+            F.count(F.lit(1)).alias("nn"),
+            F.count(F.when(is_seed, 1)).alias("ns"),
+            F.count(F.when(dang, 1)).alias("nd"),
+            F.sum("__od").alias("ne"),
+            F.max("__mw").alias("mw"),
+            # warm start: the initial dangling mass is the init vector's
+            # sum over the dangling set plus the default share of every
+            # dangling seed it does not cover
+            F.sum(F.when(dang, F.col("__init"))).alias("di"),
+            F.count(F.when(dang & is_seed & F.col("__init").isNull(), 1))
+            .alias("dn"),
+        ).first()
+        n_nodes, n_seeds = int(st["nn"]), int(st["ns"])
+        if seeds is not None and n_seeds == 0:
+            raise ValueError("seeds must be non-empty")
+        # int64 headroom: total mass is conserved at ~n_nodes*unit (floor
+        # losses only shrink it), and a near-sink node can receive almost
+        # all of it, so `damping_pct * (inc + ds)` peaks near
+        # damping_pct * n_nodes * unit, and `rank * w` at unit * n_nodes *
+        # max_weight.  Spark's non-ANSI multiply WRAPS silently on
+        # overflow, so fail loudly instead of diverging.
+        max_w = int(st["mw"] or 1)
+        if d * n_nodes * unit * max_w >= 2**63:
+            raise ValueError(
+                f"int64 headroom exceeded: damping_pct*n_nodes*unit*"
+                f"max_weight = {d}*{n_nodes}*{unit}*{max_w} >= 2^63; pass "
+                f"a smaller unit (<= {2**63 // (d * n_nodes * max_w) - 1})"
+            )
+        ns = max(n_seeds, 1)  # 0 only for an empty plain graph
+        # teleport total = (100-d)% of n*unit, split over the seeds; the
+        # full n*unit starts on the seeds (uncovered ones, when warm)
+        seed_base = ((100 - d) * n_nodes * unit // 100) // ns
+        init_share = n_nodes * unit // ns
+        dm = int(st["di"] or 0) + int(st["dn"]) * init_share
+        cadence = 1 if int(st["nd"]) else _RANK_CHECKPOINT_EVERY
+        with shuffle_scope(spark, loop_partitions(spark, int(st["ne"] or 0))):
+            # Σw_out folded INTO the edge table once, hash-partitioned on
+            # src: each iteration then costs exactly TWO exchanges (the
+            # node-sized rank table to hash(src) and the dst aggregation)
+            # at an edge-count-derived partition count (cached layouts pin
+            # every join, so AQE cannot coalesce these; no-op at production
+            # scale); joined to `outw`, not `marked0`, whose deeper lineage
+            # every iteration re-plans against (measured ~20% slower loop)
+            we = (
+                e.select("src", "dst", w.alias("w"))
+                .join(outw.select(F.col("node").alias("src"), "outw"), "src")
+                .repartition("src")
+                .persist()
+            )
+            marked = (
+                marked0.select("node", "__s", "__dang", "__init")
+                .repartition("node")
+                .persist()
+            )
+            cached += [we, marked]
+            m = marked.select(
+                "node",
+                "__dang",
+                F.coalesce(
+                    "__init", F.when(is_seed, F.lit(init_share)).otherwise(0)
+                )
+                .cast("long")
+                .alias("rank_nano"),
+            )
+            live: set[int] = set()
+            for i in range(int(iterations)):
+                ds = dm // ns  # ranks >= 0: // == div
+                incoming = (
+                    we.join(
+                        m.select(F.col("node").alias("src"), "rank_nano"),
+                        "src",
+                    )
+                    .groupBy(F.col("dst").alias("node"))
+                    .agg(
+                        F.sum(F.expr("rank_nano * w div outw"))
+                        .cast("long")
+                        .alias("inc")
+                    )
+                )
+                m = marked.join(incoming, "node", "left").select(
+                    "node",
+                    "__dang",
+                    (
+                        F.when(is_seed, F.lit(seed_base)).otherwise(0).cast("long")
+                        + F.expr(
+                            f"{d}L * (coalesce(inc, 0L)"
+                            f" + CASE WHEN __s THEN {ds}L ELSE 0L END) div 100"
+                        )
+                    ).cast("long").alias("rank_nano"),
+                )
+                if (i + 1) % cadence == 0 or i == iterations - 1:
+                    obs = Observation()
+                    m = m.observe(
+                        obs, F.sum(F.when(dang, F.col("rank_nano"))).alias("dm")
+                    )
+                    m, ids = checkpoint_tracked(m)
+                    unpersist_ids(spark, live)
+                    live = ids
+                    dm = int(obs.get["dm"] or 0)
+            return m.select("node", "rank_nano")
+    finally:
+        for df_ in cached:
+            df_.unpersist()
+
+
 def pagerank_integer(
     edges: DataFrame,
     src_col: str = "src",
@@ -706,8 +904,6 @@ def pagerank_integer(
     iterations: int = 10,
     damping_pct: int = 85,
     unit: int = 10**9,
-    checkpoint_every: int = 3,
-    assume_no_dangling: bool = False,
     init_ranks: DataFrame | None = None,
     assume_canonical: bool = False,
 ) -> DataFrame:
@@ -731,190 +927,33 @@ def pagerank_integer(
     step as an int literal (never a lazy broadcast subquery: the r11
     chain A/B measured that alternative and it lost — AQE does not
     stage-cache-reuse the subquery's subtree, so it re-executes the
-    edge join per inner step; see the cadence comment), which forces
-    the cadence to 1; with none, lazy steps chain at
-    ``checkpoint_every``.  ``assume_no_dangling=True``
-    skips even the one-time dangling count when the caller KNOWS every
-    node has out-edges — true by construction for symmetrized graphs;
-    the dangling share is exactly zero there, so results are
-    identical.
+    edge join per inner step; see :func:`_rank_nano`), which forces
+    the cadence to 1; with none, lazy steps chain three per checkpoint.
+    The dangling count comes from the one preflight aggregate, so a
+    graph without dangling nodes (a symmetrized one) pays nothing extra.
 
     ``init_ranks`` (node, rank_nano) warm-starts iteration 0 from a
     PREVIOUS run's vector instead of ``unit`` everywhere (nodes absent
     from it seed at ``unit``) — the incremental-maintenance tier
     (:func:`pagerank_incremental`); with dangling nodes, the initial
     redistributable mass is the exact integer sum of the init vector
-    over the dangling set (one bounded 1-row action on a checkpointed
-    table — never a lazy broadcast subquery).  ``assume_canonical=True``
+    over the dangling set, taken in the same preflight aggregate (never
+    a lazy broadcast subquery).  ``assume_canonical=True``
     skips the null-filter + dropDuplicates pre-pass when the caller
     KNOWS the edge table is already canonical (true by construction for
     a maintained edge store) — at corpus scale that pre-pass is a full
     edge shuffle per batch."""
-    from ..caching import checkpoint_tracked, unpersist_ids
-    from ..partitioning import loop_partitions, shuffle_scope
-
-    if not (0 < damping_pct < 100):
-        raise ValueError("damping_pct must be in (0, 100)")
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    )
-    if not assume_canonical:
-        e = e.where(
-            F.col("src").isNotNull() & F.col("dst").isNotNull()
-        ).dropDuplicates(["src", "dst"])
-    e = e.persist()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n_nodes = nodes.count()
-    # int64 headroom: total mass is conserved at ~n_nodes*unit (floor
-    # losses only shrink it), and a near-sink node can receive almost
-    # all of it, so `damping_pct * (inc + __ds)` peaks near
-    # damping_pct * n_nodes * unit.  Spark's non-ANSI multiply WRAPS
-    # silently on overflow, so fail loudly instead of diverging.
-    if int(damping_pct) * n_nodes * int(unit) >= 2**63:
-        raise ValueError(
-            f"int64 headroom exceeded: damping_pct*n_nodes*unit = "
-            f"{damping_pct}*{n_nodes}*{unit} >= 2^63; pass a smaller "
-            f"unit (<= {2**63 // (int(damping_pct) * n_nodes) - 1})"
-        )
-    outdeg = e.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("outdeg")
-    ).persist()
-    spark = edges.sparkSession
-    base = ((100 - damping_pct) * unit) // 100
-    # Static dangling flag, counted ONCE: the dangling set never changes
-    # (a node without out-edges cannot gain them mid-iteration).  When it
-    # is non-empty, each iteration's mass total rides the checkpoint
-    # action as an `observe` metric and feeds the NEXT step as a Python
-    # int literal — NOT a lazy crossJoin(broadcast(agg)) whose subquery
-    # re-executes the chain (the r5 hits_integer class; re-confirmed by
-    # the r11 chain A/B, where the subquery form lost at every depth).
-    # one node-sized aggregate over the persisted out-degree table
-    # yields the dangling count (n_nodes - #distinct src) AND the edge
-    # count (Σ outdeg) — replacing a nodes⟕outdeg anti-join count job
-    # plus a separate e.count() rescan of the edge table
-    od_row = outdeg.agg(
-        F.count(F.lit(1)).alias("__c"), F.sum("outdeg").alias("__n")
-    ).first()
-    n_edges = int(od_row["__n"] or 0)
-    n_dang = 0 if assume_no_dangling else n_nodes - int(od_row["__c"])
-    has_dang = n_dang > 0
-    if has_dang:
-        marked = nodes.join(
-            outdeg.select("node", F.lit(1).alias("__o")), "node", "left"
-        ).select("node", F.col("__o").isNull().alias("__dang"))
+    if assume_canonical:
+        e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
     else:
-        marked = nodes.withColumn("__dang", F.lit(False))
-    # dangling mass forces cadence 1: the r11 chain A/B measured the
-    # alternative — inner steps taking the mass from a broadcast 1-row
-    # aggregate over the lazy previous step — and it LOST (pagerank_
-    # incremental 11.1 s → 12.6 s at chain 2, 15.9 s at chain 3, jobs
-    # 101 → 122 → 157): AQE does NOT stage-cache-reuse the aggregate's
-    # subtree against the main chain, so every inner step re-executed
-    # the full edge join just to sum the dangling slice.  Unlike HITS
-    # (whose L1 total reduces to a NODE-sized static-weight aggregate,
-    # see hits_integer), the dangling sum needs the per-node floor of
-    # the incoming mass — no node-sized identity exists, so eager every
-    # iteration stays the right schedule.
-    cadence = 1 if has_dang else max(1, int(checkpoint_every))
-    with shuffle_scope(spark, loop_partitions(spark, n_edges)):
-        # out-degree folded INTO the edge table once, hash-partitioned on
-        # src (the float tier's `weighted` shape): each iteration then
-        # costs exactly TWO exchanges — the node-sized rank table to
-        # hash(src) and the dst aggregation — instead of re-joining m with
-        # outdeg and e separately (~5 exchanges/iteration; on bench-scale
-        # graphs the exchange count IS the wall clock).  `rank_nano div
-        # outdeg` per edge equals the per-src share joined onto each edge:
-        # identical integer arithmetic, identical sums.  The loop runs at
-        # an edge-count-derived partition count (cached layouts pin every
-        # join, so AQE cannot coalesce these; no-op at production scale).
-        we = (
-            e.join(
-                outdeg.select(F.col("node").alias("src"), "outdeg"), "src"
-            )
-            .repartition("src")
-            .persist()
-        )
-        marked = marked.repartition("node").persist()
-        live: set[int] = set()
-        if init_ranks is None:
-            m = marked.withColumn(
-                "rank_nano", F.lit(int(unit)).cast("long")
-            )
-            dm = n_dang * int(unit)  # initial state: `unit` mass per node
-        else:
-            m = marked.join(
-                init_ranks.select(
-                    "node", F.col("rank_nano").alias("__init")
-                ),
-                "node",
-                "left",
-            ).select(
-                "node",
-                "__dang",
-                F.coalesce(F.col("__init"), F.lit(int(unit)))
-                .cast("long")
-                .alias("rank_nano"),
-            )
-            dm = 0
-            if has_dang:
-                # the initial redistributable mass is data-dependent now:
-                # checkpoint the init join ONCE, then take the 1-row total
-                # as an eager action (the r5 lazy-broadcast lesson)
-                m, live = checkpoint_tracked(m)
-                dm = int(
-                    m.where(F.col("__dang"))
-                    .agg(F.sum("rank_nano"))
-                    .first()[0]
-                    or 0
-                )
-        for i in range(int(iterations)):
-            ds = dm // n_nodes if has_dang else 0  # ranks >= 0: // == div
-            incoming = (
-                we.join(
-                    m.select(F.col("node").alias("src"), "rank_nano"),
-                    "src",
-                )
-                .groupBy(F.col("dst").alias("node"))
-                .agg(
-                    F.sum(F.expr("rank_nano div outdeg"))
-                    .cast("long")
-                    .alias("inc")
-                )
-            )
-            m = marked.join(incoming, "node", "left").select(
-                "node",
-                "__dang",
-                (
-                    F.lit(int(base))
-                    + F.expr(
-                        f"{int(damping_pct)}L * (coalesce(inc, 0L)"
-                        f" + {int(ds)}L) div 100"
-                    )
-                ).cast("long").alias("rank_nano"),
-            )
-            if (i + 1) % cadence == 0 or i == iterations - 1:
-                obs = None
-                if has_dang:
-                    obs = Observation()
-                    m = m.observe(
-                        obs,
-                        F.sum(
-                            F.when(F.col("__dang"), F.col("rank_nano"))
-                        ).alias("dm"),
-                    )
-                m, ids = checkpoint_tracked(m)
-                unpersist_ids(spark, live)
-                live = ids
-                if obs is not None:
-                    dm = int(obs.get["dm"] or 0)
-        for df_ in (e, nodes, outdeg, we, marked):
-            df_.unpersist()
-        return m.select("node", "rank_nano")
+        e = _canonical_edges(edges, src_col, dst_col)
+    return _rank_nano(
+        e,
+        iterations,
+        damping_pct,
+        unit,
+        init_ranks=init_ranks,
+    )
 
 
 def fold_edges(
@@ -929,13 +968,7 @@ def fold_edges(
     re-deduplicated (it is canonical by construction), so per-batch prep
     cost scales with the batch, not the graph.  ``edges=None`` builds
     the initial store from the first batch."""
-    fresh = (
-        new_edges.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-        )
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .dropDuplicates(["src", "dst"])
-    )
+    fresh = _canonical_edges(new_edges, src_col, dst_col)
     if edges is None:
         return fresh
     store = edges.select(
@@ -953,8 +986,6 @@ def pagerank_incremental(
     iterations: int = 4,
     damping_pct: int = 85,
     unit: int = 10**9,
-    checkpoint_every: int = 3,
-    assume_no_dangling: bool = False,
 ) -> DataFrame:
     """Incremental integer-PageRank maintenance (the E154
     incremental-CC discipline applied to E199): fold a NEW edge batch
@@ -986,8 +1017,6 @@ def pagerank_incremental(
         iterations=iterations,
         damping_pct=damping_pct,
         unit=unit,
-        checkpoint_every=checkpoint_every,
-        assume_no_dangling=assume_no_dangling,
         init_ranks=ranks,
         assume_canonical=True,
     )
@@ -1426,13 +1455,10 @@ def hits_integer(
 
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    )
-    if not assume_canonical:
-        e = e.where(
-            F.col("src").isNotNull() & F.col("dst").isNotNull()
-        ).dropDuplicates(["src", "dst"])
+    if assume_canonical:
+        e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    else:
+        e = _canonical_edges(edges, src_col, dst_col)
     e = e.persist()
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -1592,8 +1618,14 @@ def hits_integer(
         )
         # the deferred zero-fill reads `nodes`: materialize before the
         # persisted inputs are released (and before the scope lifts, so
-        # nothing plans against the restored partition count)
-        return materialize_release(out, e, nodes, e_src, e_dst)
+        # nothing plans against the restored partition count); once `out`
+        # is materialized, the final authority and hub checkpoints that
+        # fed it are freed too (the release kill-switch returns `out`
+        # itself, still lazy over those blocks)
+        done = materialize_release(out, e, nodes, e_src, e_dst)
+        if done is not out:
+            unpersist_ids(spark, _a_ids | prev_ids)
+        return done
 
 
 def label_propagation(
@@ -1686,8 +1718,6 @@ def pagerank_personalized_integer(
     iterations: int = 8,
     damping_pct: int = 85,
     unit: int = 10**9,
-    checkpoint_every: int = 3,
-    assume_no_dangling: bool = False,
 ) -> DataFrame:
     """PERSONALIZED PageRank in exact integer nano-units: teleport mass
     returns to the SEED set instead of everywhere, so ranks measure
@@ -1702,147 +1732,21 @@ def pagerank_personalized_integer(
     ``n_nodes·unit``, all on seeds) — with a FIXED schedule the init is
     part of the contract, and starting at the teleport vector is the
     standard power-iteration choice.  Seeds not present in the graph
-    still teleport (they are nodes with rank and no edges).
+    still teleport (they are nodes with rank and no edges); null seeds
+    are ignored.
 
     Returns (node, rank_nano); non-seed nodes unreachable from any seed
     hold exactly 0."""
-    if not (0 < damping_pct < 100):
-        raise ValueError("damping_pct must be in (0, 100)")
-    e = (
-        edges.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-        )
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .dropDuplicates(["src", "dst"])
-        .persist()
+    sd = seeds.select(F.col(seed_col).alias("node")).where(
+        F.col("node").isNotNull()
     )
-    sd = seeds.select(F.col(seed_col).alias("node")).distinct().persist()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .unionByName(sd.select("node"))
-        .distinct()
-        .persist()
+    return _rank_nano(
+        _canonical_edges(edges, src_col, dst_col),
+        iterations,
+        damping_pct,
+        unit,
+        seeds=sd,
     )
-    outdeg = e.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("outdeg")
-    ).persist()
-    spark = edges.sparkSession
-    is_seed = F.col("__s").isNotNull()
-    # seed + out-degree flags in ONE node-sized frame whose single
-    # aggregate yields every preflight fact — n_nodes, n_seeds, both
-    # dangling counts, and the edge count (Σ outdeg) — replacing four
-    # separate preflight jobs (sd.count, nodes.count, the dangling
-    # aggregate, and an e.count rescan of the edge table)
-    marked0 = (
-        nodes.join(
-            sd.select(F.col("node"), F.lit(1).alias("__s")), "node", "left"
-        )
-        .join(outdeg, "node", "left")
-        .persist()
-    )
-    stats = marked0.agg(
-        F.count(F.lit(1)).alias("nn"),
-        F.count("__s").alias("ns"),
-        F.count(F.when(F.col("outdeg").isNull(), 1)).alias("nd"),
-        F.count(F.when(F.col("outdeg").isNull() & is_seed, 1)).alias("nds"),
-        F.sum("outdeg").alias("ne"),
-    ).first()
-    n_seeds = int(stats["ns"])
-    if n_seeds == 0:
-        raise ValueError("seeds must be non-empty")
-    n_nodes = int(stats["nn"])
-    if int(damping_pct) * n_nodes * int(unit) >= 2**63:
-        raise ValueError(
-            f"int64 headroom exceeded: damping_pct*n_nodes*unit = "
-            f"{damping_pct}*{n_nodes}*{unit} >= 2^63; pass a smaller unit"
-        )
-    # teleport total = (100-d)% of n*unit, split over seeds; the full
-    # n*unit starts on the seeds
-    seed_total = n_nodes * int(unit)
-    seed_base = ((100 - damping_pct) * seed_total // 100) // n_seeds
-    init_share = seed_total // n_seeds
-    marked = marked0.select(
-        "node", "__s", F.col("outdeg").isNull().alias("__dang")
-    )
-    if assume_no_dangling:
-        n_dang, n_dang_seeds = 0, 0
-    else:
-        n_dang, n_dang_seeds = int(stats["nd"]), int(stats["nds"])
-    has_dang = n_dang > 0
-    # cadence 1 with dangling mass — the broadcast-subquery chaining
-    # alternative measured slower (see pagerank_integer's cadence note)
-    cadence = 1 if has_dang else max(1, int(checkpoint_every))
-    n_edges = int(stats["ne"] or 0)
-    with shuffle_scope(spark, loop_partitions(spark, n_edges)):
-        # out-degree folded into a src-partitioned persisted edge table —
-        # two exchanges per iteration, at an edge-count-derived partition
-        # count (see pagerank_integer)
-        we = (
-            e.join(
-                outdeg.select(F.col("node").alias("src"), "outdeg"), "src"
-            )
-            .repartition("src")
-            .persist()
-        )
-        marked_p = marked.repartition("node").persist()
-        m = marked_p.select(
-            "node",
-            "__dang",
-            F.when(is_seed, F.lit(int(init_share)))
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("rank_nano"),
-        )
-        # initial state: init_share on every seed, 0 elsewhere
-        dm = n_dang_seeds * int(init_share)
-        live: set[int] = set()
-        for i in range(int(iterations)):
-            ds = dm // n_seeds if has_dang else 0
-            incoming = (
-                we.join(
-                    m.select(F.col("node").alias("src"), "rank_nano"),
-                    "src",
-                )
-                .groupBy(F.col("dst").alias("node"))
-                .agg(
-                    F.sum(F.expr("rank_nano div outdeg"))
-                    .cast("long")
-                    .alias("inc")
-                )
-            )
-            m = marked_p.join(incoming, "node", "left").select(
-                "node",
-                "__dang",
-                (
-                    F.when(is_seed, F.lit(int(seed_base)))
-                    .otherwise(F.lit(0))
-                    .cast("long")
-                    + F.expr(
-                        f"{int(damping_pct)}L * (coalesce(inc, 0L)"
-                        f" + CASE WHEN __s IS NOT NULL THEN {int(ds)}L"
-                        " ELSE 0L END) div 100"
-                    )
-                ).cast("long").alias("rank_nano"),
-            )
-            if (i + 1) % cadence == 0 or i == iterations - 1:
-                obs = None
-                if has_dang:
-                    obs = Observation()
-                    m = m.observe(
-                        obs,
-                        F.sum(
-                            F.when(F.col("__dang"), F.col("rank_nano"))
-                        ).alias("dm"),
-                    )
-                m, ids = checkpoint_tracked(m)
-                unpersist_ids(spark, live)
-                live = ids
-                if obs is not None:
-                    dm = int(obs.get["dm"] or 0)
-        for df_ in (e, sd, nodes, outdeg, marked0, marked_p, we):
-            df_.unpersist()
-        return m.select("node", "rank_nano")
 
 
 def pagerank_weighted_integer(
@@ -1853,8 +1757,6 @@ def pagerank_weighted_integer(
     iterations: int = 8,
     damping_pct: int = 85,
     unit: int = 10**9,
-    checkpoint_every: int = 3,
-    assume_no_dangling: bool = False,
 ) -> DataFrame:
     """WEIGHTED PageRank in exact integer nano-units: each node splits
     its mass across out-edges in proportion to INTEGER edge weights
@@ -1871,8 +1773,6 @@ def pagerank_weighted_integer(
     tells you the max safe ``unit`` when it does not.
 
     Returns (node, rank_nano)."""
-    if not (0 < damping_pct < 100):
-        raise ValueError("damping_pct must be in (0, 100)")
     e = (
         edges.select(
             F.col(src_col).alias("src"),
@@ -1886,105 +1786,5 @@ def pagerank_weighted_integer(
         )
         .groupBy("src", "dst")
         .agg(F.sum("w").alias("w"))
-        .persist()
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n_nodes = nodes.count()
-    # one pass over the cached edge table yields the max weight
-    # (headroom check) and the edge count (loop partition sizing)
-    mw_row = e.agg(
-        F.max("w").alias("__mw"), F.count(F.lit(1)).alias("__ne")
-    ).first()
-    max_w = mw_row["__mw"] or 1
-    n_edges = int(mw_row["__ne"] or 0)
-    if int(damping_pct) * n_nodes * int(unit) * int(max_w) >= 2**63:
-        safe = 2**63 // (int(damping_pct) * n_nodes * int(max_w)) - 1
-        raise ValueError(
-            f"int64 headroom exceeded (max_weight={max_w}); pass "
-            f"unit <= {safe}"
-        )
-    outw = e.groupBy(F.col("src").alias("node")).agg(
-        F.sum("w").alias("outw")
-    ).persist()
-    spark = edges.sparkSession
-    base = ((100 - damping_pct) * unit) // 100
-    # dangling count = n_nodes minus the out-weight table's row count —
-    # a node-sized aggregate instead of an anti-join count job; the
-    # dangling mass rides the checkpoint's `observe` metric as an int
-    # literal for the next step (see pagerank_integer for the rationale)
-    n_dang = (
-        0
-        if assume_no_dangling
-        else n_nodes - int(outw.count())
-    )
-    has_dang = n_dang > 0
-    if has_dang:
-        marked = nodes.join(
-            outw.select("node", F.lit(1).alias("__o")), "node", "left"
-        ).select("node", F.col("__o").isNull().alias("__dang"))
-    else:
-        marked = nodes.withColumn("__dang", F.lit(False))
-    # cadence 1 with dangling mass — the broadcast-subquery chaining
-    # alternative measured slower (see pagerank_integer's cadence note)
-    cadence = 1 if has_dang else max(1, int(checkpoint_every))
-    with shuffle_scope(spark, loop_partitions(spark, n_edges)):
-        # out-weight folded into a src-partitioned persisted edge table —
-        # two exchanges per iteration, at an edge-count-derived partition
-        # count (see pagerank_integer)
-        we = (
-            e.join(outw.select(F.col("node").alias("src"), "outw"), "src")
-            .repartition("src")
-            .persist()
-        )
-        marked = marked.repartition("node").persist()
-        m = marked.withColumn("rank_nano", F.lit(int(unit)).cast("long"))
-        dm = n_dang * int(unit)
-        live: set[int] = set()
-        for i in range(int(iterations)):
-            ds = dm // n_nodes if has_dang else 0
-            incoming = (
-                we.join(
-                    m.select(F.col("node").alias("src"), "rank_nano"),
-                    "src",
-                )
-                .groupBy(F.col("dst").alias("node"))
-                .agg(
-                    F.sum(F.expr("rank_nano * w div outw"))
-                    .cast("long")
-                    .alias("inc")
-                )
-            )
-            m = marked.join(incoming, "node", "left").select(
-                "node",
-                "__dang",
-                (
-                    F.lit(int(base))
-                    + F.expr(
-                        f"{int(damping_pct)}L * (coalesce(inc, 0L)"
-                        f" + {int(ds)}L) div 100"
-                    )
-                ).cast("long").alias("rank_nano"),
-            )
-            if (i + 1) % cadence == 0 or i == iterations - 1:
-                obs = None
-                if has_dang:
-                    obs = Observation()
-                    m = m.observe(
-                        obs,
-                        F.sum(
-                            F.when(F.col("__dang"), F.col("rank_nano"))
-                        ).alias("dm"),
-                    )
-                m, ids = checkpoint_tracked(m)
-                unpersist_ids(spark, live)
-                live = ids
-                if obs is not None:
-                    dm = int(obs.get["dm"] or 0)
-        for df_ in (e, nodes, outw, we, marked):
-            df_.unpersist()
-        return m.select("node", "rank_nano")
+    return _rank_nano(e, iterations, damping_pct, unit)

@@ -1490,7 +1490,7 @@ def textrank_scores(
     nano-unit ranks, so the whole pipeline value-hashes across engines
     (the float TextRank everyone ships is partition-order-dependent in
     the last ulps).  The symmetrized graph has no dangling nodes, so
-    the dangling aggregate is skipped.
+    the rank loop chains three lazy steps per checkpoint.
 
     Returns (token, rank_nano BIGINT) for every graph node; take the
     top-k downstream (ties deterministic on the integer rank + token).
@@ -1517,5 +1517,4 @@ def textrank_scores(
         edges,
         iterations=iterations,
         damping_pct=damping_pct,
-        assume_no_dangling=True,
     ).select(F.col("node").alias("token"), "rank_nano")

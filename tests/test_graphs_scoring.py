@@ -238,9 +238,7 @@ class TestPersonalizedPagerank:
         sd = spark.createDataFrame([(1,)], "node long")
         got = {
             r["node"]: r["rank_nano"]
-            for r in pagerank_personalized_integer(
-                e, sd, assume_no_dangling=False
-            ).collect()
+            for r in pagerank_personalized_integer(e, sd).collect()
         }
         assert got[5] == 0 and got[6] == 0
         assert got[1] > 0 and got[2] > 0

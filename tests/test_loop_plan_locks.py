@@ -76,15 +76,57 @@ def test_gather_join_does_not_reexchange_partitioned_edges(spark):
         e.unpersist()
 
 
-def test_rank_loop_marginal_cost_is_bounded(spark):
-    from sparkplug_spark.operators import hits_integer, pagerank_integer
+def _driver_actions(spark, monkeypatch, fn):
+    """(action, logical root) of each outermost DataFrame action ``fn``
+    runs on the driver; checkpoints are not DataFrame actions."""
+    DataFrame = type(spark.range(0))  # the concrete (classic) class
+    calls, depth = [], [0]
+
+    def spy(name):
+        orig = getattr(DataFrame, name)
+
+        def wrapped(self, *a, **k):
+            if depth[0] == 0:
+                root = self._jdf.queryExecution().logical().nodeName()
+                calls.append((name, root))
+            depth[0] += 1
+            try:
+                return orig(self, *a, **k)
+            finally:
+                depth[0] -= 1
+
+        monkeypatch.setattr(DataFrame, name, wrapped)
+
+    for name in ("collect", "count", "first", "head", "take"):
+        spy(name)
+    fn()
+    return calls
+
+
+def test_rank_loop_marginal_cost_is_bounded(spark, monkeypatch):
+    from sparkplug_spark.operators import (
+        hits_integer,
+        pagerank_integer,
+        pagerank_personalized_integer,
+        pagerank_weighted_integer,
+    )
 
     e = _edges(spark)
-    for op, j_cap, t_cap in (
-        (hits_integer, 18, 24),  # measured marginal: 15 jobs / 15 tasks
-        (pagerank_integer, 15, 24),  # measured marginal: 12 jobs / 12 tasks
+    seeds = spark.range(0, 97, 7).select(F.col("id").alias("node"))
+    we = e.withColumn("weight", F.col("src") % 3 + 1)
+    for op, args, j_cap, t_cap in (
+        (hits_integer, (e,), 18, 24),  # measured marginal: 15 jobs / 15 tasks
+        (pagerank_integer, (e,), 15, 24),  # measured marginal: 12 jobs / 12 tasks
+        (pagerank_personalized_integer, (e, seeds), 15, 24),  # 12 / 12
+        (pagerank_weighted_integer, (we,), 15, 24),  # 12 jobs / 12 tasks
     ):
-        j3, t3 = _jobs_tasks(spark, lambda: op(e, iterations=3))
-        j6, t6 = _jobs_tasks(spark, lambda: op(e, iterations=6))
+        j3, t3 = _jobs_tasks(spark, lambda: op(*args, iterations=3))
+        j6, t6 = _jobs_tasks(spark, lambda: op(*args, iterations=6))
         assert j6 - j3 <= j_cap, (op.__name__, j3, j6)
         assert t6 - t3 <= t_cap, (op.__name__, t3, t6)
+    # the integer PageRank preflight is ONE aggregate action: every count
+    # and headroom fact comes from the same node-sized aggregate
+    acts = _driver_actions(
+        spark, monkeypatch, lambda: pagerank_integer(e, iterations=1)
+    )
+    assert acts == [("first", "Aggregate")], acts

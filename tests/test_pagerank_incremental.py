@@ -107,6 +107,23 @@ class TestWarmStart:
         }
         assert cold == warm
 
+    def test_warm_start_with_dangling_nodes(self, spark):
+        # the init vector covers one dangling node (4) and leaves the other
+        # (6) and a live node (5) at UNIT, so the initial dangling mass
+        # mixes stored ranks and default shares
+        edges = [(1, 2), (2, 3), (3, 1), (1, 4), (5, 1), (2, 6)]
+        init = {1: 3 * UNIT, 2: UNIT // 2, 3: 7, 4: 2 * UNIT}
+        init_df = spark.createDataFrame(
+            list(init.items()), "node long, rank_nano long"
+        )
+        got = {
+            r["node"]: r["rank_nano"]
+            for r in pagerank_integer(
+                self._df(spark, edges), iterations=3, init_ranks=init_df
+            ).collect()
+        }
+        assert got == _py_pagerank(edges, init, 3)
+
     def test_hits_incremental_matches_python_referee(self, spark):
         from sparkplug_spark.operators import hits_incremental, hits_integer
 
@@ -173,7 +190,6 @@ class TestWarmStart:
                 iterations=3,
                 assume_canonical=True,
                 init_ranks=init_df,
-                assume_no_dangling=True,
             ).collect()
         }
         want = _py_pagerank(edges, {1: 3 * UNIT, 2: UNIT // 2}, 3)
