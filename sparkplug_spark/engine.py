@@ -1,7 +1,11 @@
 """The SparkPlug engine: sequential conditional-override rules, Spark-first.
 
-Reference semantics (``SparkPlug.scala``, ``PlugRule.scala``) re-expressed as
-native Column expressions — NO SQL-string codegen, NO temp views, NO UDFs:
+Reference semantics (``SparkPlug.scala``, ``PlugRule.scala``) re-expressed
+without temp views or UDFs.  Like the reference's generated ``select``
+(``PlugRule.scala:49-77``), each rule compiles to SQL text: one
+``CASE WHEN`` string per written column under one ``F.expr``, with
+conditions and backtick values parsed alone before they are embedded
+(``_rule_columns``):
 
 - one rule = one ``df.withColumns({...})`` projection in which every
   expression references the rule's *input* columns (identical to the
@@ -17,12 +21,16 @@ native Column expressions — NO SQL-string codegen, NO temp views, NO UDFs:
   cadence because per-rule temp views + UDF boundaries defeated fusion;
   the cadence stays an opt-in knob for long chains
   (``SparkPlug.scala:109-125``);
-- plug-details audit appends via ``concat(details, array(struct(...)))``
+- plug-details audit appends via ``concat(details, array(named_struct(...)))``
   gated on ``condition AND any value actually changed`` using null-safe
   equality (``PlugRule.scala:49-77``, ``SparkPlugUDFs.scala:14-31``);
 - changed-row metrics via ``DataFrame.observe`` — piggybacks on the caller's
   action instead of the reference's extra accumulator job
   (``SparkPlug.scala:52-62``).
+
+SQL text, not ``Column`` composition, because on PySpark classic every
+``Column`` call makes 10-20 py4j round trips (call-site capture) and a rule
+needs dozens of them; one ``F.expr`` per written column makes 3.
 
 Documented deviations (SURVEY §2.1 Q1-Q4): struct keys work at any depth in
 both validate and apply; old-value columns drop correctly; coercion failures
@@ -131,6 +139,199 @@ def _null_of(data_type: T.DataType) -> Column:
     return F.lit(None).cast(data_type)
 
 
+def _ident(name: str) -> str:
+    """Backtick-quoted identifier: any column name parses as one name."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _quote(path: str) -> str:
+    """Dotted column path as SQL text, each segment backtick-quoted."""
+    return ".".join(_ident(p) for p in path.split("."))
+
+
+def _sql_string(v: str, ddl: str = "STRING") -> str:
+    # hex of the UTF-8 bytes: no quote, backslash, comment or newline in v
+    # can reach the SQL lexer, whatever spark.sql.parser.escapedStringLiterals
+    return f"CAST(X'{v.encode().hex()}' AS {ddl})"
+
+
+def _sql_type(data_type: T.DataType) -> str:
+    """DDL that parses back to ``data_type``; timestamps are spelled
+    ``TIMESTAMP_LTZ`` so ``spark.sql.timestampType`` cannot retype them."""
+    if isinstance(data_type, T.TimestampType):
+        return "TIMESTAMP_LTZ"
+    if isinstance(data_type, T.StructType):
+        return "STRUCT<" + ", ".join(
+            f"{_ident(f.name)}: {_sql_type(f.dataType)}"
+            + ("" if f.nullable else " NOT NULL")
+            for f in data_type.fields
+        ) + ">"
+    if isinstance(data_type, T.ArrayType):
+        return f"ARRAY<{_sql_type(data_type.elementType)}>"
+    if isinstance(data_type, T.MapType):
+        return f"MAP<{_sql_type(data_type.keyType)}, {_sql_type(data_type.valueType)}>"
+    return data_type.simpleString()
+
+
+def _literal_sql(value: str, data_type: T.DataType, lenient: bool) -> str:
+    """A literal action value as SQL text typed exactly like
+    ``F.lit(coerce_action_value(value, data_type)).cast(data_type)``."""
+    try:
+        v = coerce_action_value(value, data_type)
+    except CoercionError:
+        if lenient:
+            # Reference quirk Q3: unvalidated coercion failure writes null
+            # (PlugRule.scala:129).
+            return f"CAST(NULL AS {_sql_type(data_type)})"
+        raise
+    ddl = _sql_type(data_type)
+    if isinstance(data_type, T.BooleanType):
+        return "true" if v else "false"
+    if isinstance(data_type, (T.FloatType, T.DoubleType)):
+        # repr round-trips every double, nan/inf/-0.0 included
+        return f"CAST(CAST('{v!r}' AS DOUBLE) AS {ddl})"
+    if isinstance(data_type, T.StringType):
+        return _sql_string(v, ddl)
+    if isinstance(data_type, T.DecimalType):
+        return f"CAST({v}BD AS {ddl})"
+    if isinstance(data_type, T.DateType):
+        return f"DATE'{v.isoformat()}'"
+    if isinstance(data_type, T.TimestampType):
+        # the process-local-time conversion createDataFrame applies; F.lit's
+        # java.sql.Timestamp path agrees from ~1900 on, but before that it
+        # applies the hybrid Julian calendar and the old zone offsets
+        return f"timestamp_micros({T.TimestampType().toInternal(v)}L)"
+    return f"CAST({v}L AS {ddl})"  # the integer types
+
+
+def _parser(spark: SparkSession) -> Callable[[str], object]:
+    """The session's SQL expression parser; raises ``ParseException``
+    (``F.expr`` only parses when the plan is analyzed)."""
+    return spark._jsparkSession.sessionState().sqlParser().parseExpression
+
+
+def _rule_columns(
+    rule: PlugRule,
+    fields: dict[str, T.DataType],
+    details_column: str | None,
+    entry_builder: Callable[[PlugRule], Column],
+    keep_old_field: bool,
+    lenient: bool,
+    parse: Callable[[str], object],
+    alias_prefix: str | None = None,
+) -> dict[str, Column]:
+    """Compile ONE rule to its written top-level columns, each the reference's
+    generated ``select`` item (``PlugRule.scala:49-77``) as SQL text under
+    one ``F.expr``; every expression reads the rule's INPUT columns.
+
+    A condition or backtick value is parsed ALONE first (``parse``), so a
+    fragment such as ``a = 1) OR (b = 2`` raises instead of changing the
+    text around it; it is then embedded as ``(<fragment>\\n)``, which also
+    ends a trailing ``--`` comment.  Nested struct keys go through
+    ``withField`` and a custom ``entry_builder`` keeps its ``Column``
+    contract; both compose ``Column`` calls around the same SQL text.
+    With ``alias_prefix`` every column is named ``<alias_prefix><column>``.
+    """
+
+    def fragment(text: str) -> str:
+        parse(text)
+        return f"({text}\n)"
+
+    def when(then: str, otherwise: str) -> str:
+        return f"CASE WHEN {cond} THEN {then} ELSE {otherwise} END"
+
+    def invalid(msg: str) -> PlugRuleValidationException:
+        return PlugRuleValidationException([PlugRuleValidationError(rule.name, msg)])
+
+    cond = fragment(rule.condition)
+    # Value text + null-safe change gate per action, both against the INPUT
+    # columns (PlugRule.scala:54-65): not(key <=> value), PlugRule.scala:58.
+    values: dict[str, str] = {}
+    gates: list[str] = []
+    for action in rule.actions:
+        dt = fields.get(action.key)
+        if dt is None:
+            raise invalid(f'Field "{action.key}" not found in the schema.')
+        if action.is_expression:
+            v = fragment(action.expression)
+        else:
+            try:
+                v = _literal_sql(action.value, dt, lenient)
+            except CoercionError:
+                raise invalid(
+                    f'Value "{action.value}" cannot be assigned to '
+                    f"field {action.key}."
+                ) from None
+        values[action.key] = v
+        gates.append(f"NOT ({_quote(action.key)} <=> {v})")
+
+    # Group actions by top-level column; one replacement column each.
+    by_parent: dict[str, list] = {}
+    for action in rule.actions:
+        by_parent.setdefault(action.update_key, []).append(action)
+
+    out: dict[str, str | Column] = {}
+    for parent, actions in by_parent.items():
+        cur: str | Column = _quote(parent)  # SQL text until a withField
+        for action in actions:
+            v = values[action.key]
+            if action.key == parent:
+                # whole-column override
+                cur = (
+                    when(v, cur) if isinstance(cur, str)
+                    else F.when(F.expr(cond), F.expr(v)).otherwise(cur)
+                )
+            else:
+                # nested struct field, arbitrary depth via withField
+                # (fixes reference Q2/Q4 — PlugRule.scala:102-124 handled
+                # exactly 2 levels and collided on multi-action structs).
+                if isinstance(cur, str):
+                    cur = F.expr(cur)
+                cur = cur.withField(
+                    action.key.split(".", 1)[1],
+                    F.expr(when(v, _quote(action.key))),
+                )
+        if not isinstance(cur, str):
+            # Null parent stays null; the action does not materialize the
+            # struct (PlugRule.scala:111, SparkPlugSpec.scala:394).
+            cur = F.when(
+                F.expr(f"{_quote(parent)} IS NULL"), _null_of(fields[parent])
+            ).otherwise(cur)
+        out[parent] = cur
+
+        if keep_old_field:
+            # <updateKey>_<ruleName>_old (PlugRule.scala:83,153; README:186-194)
+            out[f"{parent}_{rule.name}_old"] = _quote(parent)
+
+    if details_column is not None:
+        details = _quote(details_column)
+        gate = f"{cond} AND ({' OR '.join(gates) or 'false'})"
+        if entry_builder is default_details_entry:
+            names = ", ".join(_sql_string(k) for k in rule.field_names)
+            entry = (
+                f"named_struct('name', {_sql_string(rule.name)}, "
+                f"'version', {_sql_string(rule.version)}, "
+                f"'fieldNames', array({names}))"
+            )
+            out[details_column] = (
+                f"CASE WHEN {gate} THEN concat({details}, array({entry})) "
+                f"ELSE {details} END"
+            )
+        else:
+            d = F.expr(details)
+            out[details_column] = F.when(
+                F.expr(gate), F.concat(d, F.array(entry_builder(rule)))
+            ).otherwise(d)
+
+    def column(name: str, c: str | Column) -> Column:
+        if alias_prefix is None:
+            return F.expr(c) if isinstance(c, str) else c
+        alias = alias_prefix + name
+        return F.expr(f"{c} AS {_ident(alias)}") if isinstance(c, str) else c.alias(alias)
+
+    return {name: column(name, c) for name, c in out.items()}
+
+
 def apply_rule(
     df: DataFrame,
     rule: PlugRule,
@@ -144,10 +345,11 @@ def apply_rule(
 
     Equivalent of the reference's generated
     ``select *, if(cond, v, col) as col_new, ... from __plug_table__`` plus
-    the rename dance (``SparkPlug.scala:98-102``, ``PlugRule.scala:49-97``) —
-    but expressed directly with ``withColumns`` so every expression reads the
-    rule's input row and Catalyst collapses consecutive rules into one
-    projection.
+    the rename dance (``SparkPlug.scala:98-102``, ``PlugRule.scala:49-97``):
+    each written column is one SQL ``CASE WHEN`` text (see
+    :func:`_rule_columns`) applied with ``withColumns``, so every expression
+    reads the rule's input row, no temp view is registered, and Catalyst
+    collapses consecutive rules where it can.
 
     ``fields`` is the dotted-path -> DataType map of ``df``'s schema; pass it
     when folding many rules so each step skips the ``df.schema`` analysis
@@ -159,82 +361,17 @@ def apply_rule(
     """
     if fields is None:
         fields = build_fields_map(df.schema)
-    cond = F.expr(rule.condition)
-    updates: dict[str, Column] = {}
-
-    # Pre-compute per-action value columns + change predicates against the
-    # INPUT columns (reference computes both inside the same select —
-    # PlugRule.scala:54-65).
-    value_cols: dict[str, Column] = {}
-    changed_preds: list[Column] = []
-    for action in rule.actions:
-        dt = fields.get(action.key)
-        if dt is None:
-            raise PlugRuleValidationException(
-                [
-                    PlugRuleValidationError(
-                        rule.name, f'Field "{action.key}" not found in the schema.'
-                    )
-                ]
-            )
-        try:
-            v = _value_column(action, dt, lenient)
-        except CoercionError:
-            raise PlugRuleValidationException(
-                [
-                    PlugRuleValidationError(
-                        rule.name,
-                        f'Value "{action.value}" cannot be assigned to '
-                        f"field {action.key}.",
-                    )
-                ]
-            ) from None
-        value_cols[action.key] = v
-        # Null-safe change gate: not(key <=> value)  (PlugRule.scala:58)
-        changed_preds.append(~F.col(action.key).eqNullSafe(v))
-
-    # Group actions by top-level column; build one replacement Column each.
-    by_parent: dict[str, list] = {}
-    for action in rule.actions:
-        by_parent.setdefault(action.update_key, []).append(action)
-
-    for parent, actions in by_parent.items():
-        parent_dt = fields[parent]
-        cur = F.col(parent)
-        touched_nested = False
-        for action in actions:
-            v = value_cols[action.key]
-            if action.key == parent:
-                # whole-column override
-                cur = F.when(cond, v).otherwise(cur)
-            else:
-                # nested struct field, arbitrary depth via withField
-                # (fixes reference Q2/Q4 — PlugRule.scala:102-124 handled
-                # exactly 2 levels and collided on multi-action structs).
-                inner = action.key.split(".", 1)[1]
-                touched_nested = True
-                cur = cur.withField(
-                    inner, F.when(cond, v).otherwise(F.col(action.key))
-                )
-        if touched_nested:
-            # Null parent stays null; the action does not materialize the
-            # struct (PlugRule.scala:111, SparkPlugSpec.scala:394).
-            cur = F.when(F.col(parent).isNull(), _null_of(parent_dt)).otherwise(cur)
-        updates[parent] = cur
-
-        if keep_old_field:
-            # <updateKey>_<ruleName>_old (PlugRule.scala:83,153; README:186-194)
-            updates[f"{parent}_{rule.name}_old"] = F.col(parent)
-
-    if details_column is not None:
-        changed = reduce(lambda a, b: a | b, changed_preds) if changed_preds else F.lit(False)
-        details = F.col(details_column)
-        updates[details_column] = F.when(
-            cond & changed,
-            F.concat(details, F.array(details_entry_builder(rule))),
-        ).otherwise(details)
-
-    return df.withColumns(updates)
+    return df.withColumns(
+        _rule_columns(
+            rule,
+            fields,
+            details_column,
+            details_entry_builder,
+            keep_old_field,
+            lenient,
+            _parser(df.sparkSession),
+        )
+    )
 
 
 def apply_rule_reference_compat(

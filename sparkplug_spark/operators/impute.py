@@ -32,6 +32,8 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..engine import _ident
+
 __all__ = ["impute_nulls", "suggest_fill_rules"]
 
 
@@ -119,12 +121,6 @@ def impute_nulls(
             ),
         ).drop(f"__fill_{col}")
     return out
-
-
-def _quote_ident(name: str) -> str:
-    """Backtick-quote a column name for use inside a rule condition, so
-    non-plain identifiers (dashes, spaces) parse as column references."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def _sql_literal(v, col: str) -> str:
@@ -230,7 +226,7 @@ def suggest_fill_rules(
                 PlugRule(
                     f"{name_prefix}_{col}_const",
                     version,
-                    f"{_quote_ident(col)} IS NULL",
+                    f"{_ident(col)} IS NULL",
                     (PlugAction(col, str(value)),),
                 )
             )
@@ -245,10 +241,10 @@ def suggest_fill_rules(
             fills.collect(), key=lambda r: tuple(str(r[c]) for c in by)
         )
         for i, r in enumerate(rows):
-            conds = [f"{_quote_ident(col)} IS NULL"] + [
-                f"{_quote_ident(c)} IS NULL"
+            conds = [f"{_ident(col)} IS NULL"] + [
+                f"{_ident(c)} IS NULL"
                 if r[c] is None
-                else f"{_quote_ident(c)} = {_sql_literal(r[c], c)}"
+                else f"{_ident(c)} = {_sql_literal(r[c], c)}"
                 for c in by
             ]
             fill = r[f"__fill_{col}"]

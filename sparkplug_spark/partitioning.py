@@ -14,6 +14,7 @@ cluster utilization of everything downstream.
 
 from __future__ import annotations
 
+import logging
 import math
 from contextlib import contextmanager
 
@@ -26,6 +27,8 @@ __all__ = [
     "loop_partitions",
     "shuffle_scope",
 ]
+
+_log = logging.getLogger(__name__)
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -116,7 +119,13 @@ def shuffle_scope(spark: SparkSession, n_partitions: int):
     # the batch frame's own session never see the outer query here.
     try:
         active = list(spark.streams.active)
-    except Exception:  # noqa: BLE001 - Connect backends may lack .streams
+    except Exception as e:  # noqa: BLE001 - Connect backends may lack .streams
+        _log.warning(
+            "shuffle_scope: cannot list this session's streaming queries "
+            "(%s: %s); the active-stream guard is skipped",
+            type(e).__name__,
+            e,
+        )
         active = []
     if active:
         raise RuntimeError(

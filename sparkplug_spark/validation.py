@@ -27,7 +27,7 @@ from pyspark.sql import types as T
 from .models import PlugRule, PlugRuleValidationError
 
 if TYPE_CHECKING:  # pragma: no cover
-    from pyspark.sql import SparkSession
+    from pyspark.sql import DataFrame, SparkSession
 
 __all__ = [
     "build_fields_map",
@@ -155,23 +155,47 @@ def _validate_structural(
     return errors
 
 
+def _dry_run(
+    empty: "DataFrame", fields: dict[str, T.DataType], rules: list[PlugRule]
+) -> None:
+    """Analyze every rule's compiled columns in ONE ``select`` over
+    ``empty``; raises what the first failing rule raises."""
+    from .engine import _parser, _rule_columns  # local import to avoid cycle
+
+    parse = _parser(empty.sparkSession)
+    empty.select(
+        *(
+            c
+            for i, rule in enumerate(rules)
+            for c in _rule_columns(
+                rule, fields, None, None, False, False, parse, alias_prefix=f"{i}:"
+            ).values()
+        )
+    ).schema  # force analysis
+
+
+def _sql_errors(
+    empty: "DataFrame", fields: dict[str, T.DataType], rule: PlugRule
+) -> list[PlugRuleValidationError]:
+    """One rule's dry run: the engine's own ``apply_rule`` over ``empty``."""
+    from .engine import apply_rule  # local import to avoid cycle
+
+    try:
+        apply_rule(empty, rule, fields=fields).schema  # force analysis
+    except Exception as e:  # ParseException, AnalysisException and friends
+        msg = getattr(e, "desc", None) or str(e)
+        return [PlugRuleValidationError(rule.name, f"[SQL Error] {msg}")]
+    return []
+
+
 def validate_rule_sql(
     spark: "SparkSession", schema: T.StructType, rule: PlugRule
 ) -> list[PlugRuleValidationError]:
     """SQL dry-run: build the rule's plan over an empty DataFrame of the
-    target schema and surface analysis errors (reference
-    ``SparkPlug.scala:78-86``).  PySpark analyzes eagerly on ``withColumns``,
-    so a ``try`` suffices; no job runs (empty local relation)."""
-    from .engine import apply_rule  # local import to avoid cycle
-
-    empty = spark.createDataFrame([], schema)
-    try:
-        applied = apply_rule(empty, rule, details_column=None)
-        applied.schema  # force analysis
-    except Exception as e:  # AnalysisException and friends
-        msg = getattr(e, "desc", None) or str(e)
-        return [PlugRuleValidationError(rule.name, f"[SQL Error] {msg}")]
-    return []
+    target schema and surface parse and analysis errors (reference
+    ``SparkPlug.scala:78-86``).  Analysis is eager, so a ``try`` suffices;
+    no job runs (empty local relation)."""
+    return _sql_errors(spark.createDataFrame([], schema), build_fields_map(schema), rule)
 
 
 def validate_rules(
@@ -181,11 +205,16 @@ def validate_rules(
 ) -> list[PlugRuleValidationError]:
     """Full validation pass.  The SQL dry-run runs only when structural
     validation is clean AND a SparkSession is supplied
-    (reference ``SparkPlug.scala:67-76``)."""
+    (reference ``SparkPlug.scala:67-76``).  All rules are analyzed in one
+    ``select`` over one empty relation; only when that fails is each rule
+    dry-run alone, to name the failing rules with their own messages."""
     errors = _validate_structural(schema, rules)
-    if errors or spark is None:
+    if errors or spark is None or not rules:
         return errors
-    out: list[PlugRuleValidationError] = []
-    for rule in rules:
-        out.extend(validate_rule_sql(spark, schema, rule))
-    return out
+    empty = spark.createDataFrame([], schema)
+    fields = build_fields_map(schema)
+    try:
+        _dry_run(empty, fields, rules)
+    except Exception:  # noqa: BLE001 - attributed per rule below
+        return [e for rule in rules for e in _sql_errors(empty, fields, rule)]
+    return []

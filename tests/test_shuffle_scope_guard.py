@@ -96,3 +96,39 @@ def test_foreachbatch_clone_session_scopes_fine(spark):
     assert seen["inner"] == "2"
     assert seen["outer"] == "4"  # outer session untouched by the scope
     assert seen["rows"] == 10
+
+
+class _StubConf:
+    def __init__(self):
+        self.values = {"spark.sql.shuffle.partitions": "8"}
+
+    def get(self, key, default=None):
+        return self.values.get(key, default)
+
+    def set(self, key, value):
+        self.values[key] = value
+
+
+class _SessionWithoutStreams:
+    """A session whose ``.streams`` raises, as on backends without a
+    streaming query manager."""
+
+    def __init__(self):
+        self.conf = _StubConf()
+
+    @property
+    def streams(self):
+        raise NotImplementedError("streams is not available")
+
+
+def test_skipped_guard_is_logged(caplog):
+    stub = _SessionWithoutStreams()
+    with caplog.at_level("WARNING", logger="sparkplug_spark.partitioning"):
+        with shuffle_scope(stub, 2):
+            assert stub.conf.get("spark.sql.shuffle.partitions") == "2"
+    assert stub.conf.get("spark.sql.shuffle.partitions") == "8"
+    assert any(
+        "guard is skipped" in r.getMessage()
+        and "NotImplementedError" in r.getMessage()
+        for r in caplog.records
+    )
