@@ -17,7 +17,8 @@ unpersist the working set.
 RDD ids a checkpoint call registers so iterative operators can free round
 N-1's blocks once round N is materialized (freeing the *final* round would
 destroy the result — local checkpoints truncate lineage, so the blocks are
-the only copy).
+the only copy); ``fixpoint`` is that loop, shared by the graph and
+components operators.
 
 Id capture diffs the persistent-RDD registry around the checkpoint call
 under a module lock, so concurrent driver threads using THIS module can't
@@ -30,8 +31,9 @@ created, never corruption of this module's own tracking.
 from __future__ import annotations
 
 import threading
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 __all__ = ["checkpoint_tracked", "unpersist_ids", "materialize_release"]
 
@@ -70,6 +72,50 @@ def unpersist_ids(spark: SparkSession, ids: set[int], blocking: bool = False) ->
     for i in jmap.keySet().toArray():
         if i in ids:
             jmap.get(i).unpersist(blocking)
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame, dict | None], DataFrame],
+    max_steps: int,
+    *,
+    chain: int = 1,
+    observe: Sequence[Column] = (),
+    stop: Callable[[dict, dict | None, DataFrame, DataFrame], bool] | None = None,
+    ids: set[int] = frozenset(),
+    metrics: dict | None = None,
+    reliable: bool = False,
+) -> tuple[DataFrame, set[int], dict | None, bool]:
+    """Iterate ``state = step(state, metrics)`` at most ``max_steps``
+    times, ``chain`` lazy steps per checkpoint; returns (state, its block
+    ids, its metrics, converged).  Per round: chain the steps (each reads
+    the previous output projected to ``state``'s columns, so a step may
+    add probe columns), take ONE checkpoint with the ``observe``
+    aggregates riding it, call ``stop(metrics, prev_metrics, new, old)``
+    while ``old`` is still readable, then free the previous round's
+    blocks (``ids`` in the first round).  ``step`` gets the metrics of the
+    checkpoint it reads (``metrics`` for the initial state) and ``None``
+    when chained on a lazy state.  ``converged`` is True only when
+    ``stop`` said so; callers raise their own errors."""
+    spark = state.sparkSession
+    cols = state.columns
+    ids = set(ids)
+    done, converged = 0, False
+    while done < max_steps and not converged:
+        n = min(chain, max_steps - done)
+        nxt = state
+        for k in range(n):
+            nxt = step(nxt.select(*cols), metrics if k == 0 else None)
+        obs = Observation() if observe else None
+        if obs is not None:
+            nxt = nxt.observe(obs, *observe)
+        nxt, new_ids = checkpoint_tracked(nxt.select(*cols), reliable=reliable)
+        got = obs.get if obs is not None else None
+        converged = stop is not None and bool(stop(got, metrics, nxt, state))
+        unpersist_ids(spark, ids)
+        state, ids, metrics = nxt, new_ids, got
+        done += n
+    return state, ids, metrics, converged
 
 
 def materialize_release(

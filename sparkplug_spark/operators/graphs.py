@@ -1,31 +1,35 @@
-"""Graph centrality: distributed PageRank by power iteration.
+"""Graph operators over directed edge lists: ranking (float and exact
+integer PageRank, personalized and weighted PageRank, float and integer
+HITS, with warm-start incremental tiers), reach (multi-source BFS, the
+bow-tie report), structure (strongly connected components, k-core
+coreness, triangle counts) and communities (label propagation).  The
+undirected connected-components tiers live in ``groups.py``.
 
-Complements the star-contraction connected components in ``groups.py``:
-CC answers "which items form one cluster", PageRank answers "which nodes
-matter most inside it" — the standard importance prior for co-purchase
-recommendation graphs, citation/link corpora, and crawl frontier
-prioritization (Page et al., 1999; the DataFrame formulation follows the
-classic iterative join-aggregate shape every Spark-native graph library
-uses).
-
-Scale plan: the edge list (annotated once with 1/out-degree weights) is
-checkpointed and hash-partitioned on ``src`` up front, so every
-iteration's rank join reshuffles only the node-sized rank table against a
-STABLE edge partitioning; contributions aggregate map-side before the one
-``dst`` shuffle per iteration.  Dangling-node mass is folded in through a
-1-row broadcast (never a driver collect), and each iteration's rank
-checkpoint frees the previous one (``checkpoint_tracked`` /
-``unpersist_ids`` — the same lineage-truncation-plus-release discipline
-as the CC loops, without which 20 iterations of lazy lineage would both
-blow up the plan and leak 20 generations of shuffle blocks).
+Scale plan shared by the family: the edge list is canonicalized once
+(:func:`_canonical_edges`), persisted or checkpointed hash-partitioned on
+each gather key, so an iteration re-exchanges only node-sized vectors
+against a STABLE edge layout; loop shuffles run at an edge-count-derived
+partition count (:func:`~..partitioning.loop_partitions`, a no-op at
+production scale).  Every iterative loop except the BFS frontier, the
+SCC outer peel and :func:`hits_integer` runs through
+:func:`~..caching.fixpoint`: chained lazy steps, one checkpoint per
+round with its scalar feed (dangling mass, norms, change counts) riding
+that action as ``observe`` metrics, and round N-1's blocks freed once
+round N has landed — without which 20 iterations of lazy lineage would
+both blow up the plan and leak 20 generations of blocks.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from ..caching import checkpoint_tracked, unpersist_ids
+from ..caching import (
+    checkpoint_tracked,
+    fixpoint,
+    materialize_release,
+    unpersist_ids,
+)
 from ..partitioning import loop_partitions, shuffle_scope
 
 #: min-propagation sub-steps chained per checkpoint in the SCC peeler's
@@ -60,8 +64,17 @@ _SCC_CHAIN = 2
 #: node-sized checkpoint writes, a net loss.  Both loops therefore keep
 #: ONE eager checkpoint per iteration wherever a scalar must feed
 #: forward (dangling mass / L1 total) and lazy chaining where none
-#: does (`checkpoint_every` in the float tiers, `_RANK_CHECKPOINT_EVERY`
-#: in the integer PageRank tiers).
+#: does (`_RANK_CHECKPOINT_EVERY` in both PageRank tiers,
+#: `_HITS_CHECKPOINT_EVERY` in the float HITS tier).
+
+#: lazy rank steps chained per checkpoint by the float and integer
+#: PageRank tiers when no node dangles (dangling mass forces one eager
+#: checkpoint per step: see :func:`_rank_nano`)
+_RANK_CHECKPOINT_EVERY = 3
+
+#: un-normalized float HITS iterations chained per checkpoint (the
+#: norms that rescale the state ride each checkpoint as metrics)
+_HITS_CHECKPOINT_EVERY = 2
 
 __all__ = [
     "pagerank",
@@ -87,8 +100,6 @@ def pagerank(
     damping: float = 0.85,
     iterations: int = 10,
     tol: float | None = None,
-    checkpoint_every: int = 3,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """PageRank over a directed edge list; returns (node, rank) with
     ranks summing to 1 over the graph's nodes (union of endpoints).
@@ -119,10 +130,10 @@ def pagerank(
     iteration must run eagerly (the next step's plan needs this step's
     observed mass as a literal).  When it has none — every symmetrized /
     co-occurrence graph — the mass is identically zero, iterations are
-    pure lazy transformations, and ``checkpoint_every`` steps chain into
-    one action (lineage stays bounded by the cadence; blocks of round
-    N-1 free at each checkpoint).  At bench scale the action launch IS
-    the iteration cost, so the cadence is a direct wall-clock divisor.
+    pure lazy transformations, and ``_RANK_CHECKPOINT_EVERY`` steps chain
+    into one action (lineage stays bounded by the cadence; blocks of
+    round N-1 free at each checkpoint).  At bench scale the action launch
+    IS the iteration cost, so the cadence is a direct wall-clock divisor.
 
     ``tol``: optional convergence early exit — stop once the L1 delta
     Σ|rank_i - rank_{i-1}| drops below it (power iteration contracts
@@ -159,9 +170,7 @@ def pagerank(
             )
             .repartition("src")
         )
-        weighted, w_ids = checkpoint_tracked(
-            weighted, reliable=reliable_checkpoint
-        )
+        weighted, w_ids = checkpoint_tracked(weighted)
         n_df = nodes.select(F.count(F.lit(1)).cast("long").alias("__n"))
         # static dangling flag: a node with no out-edges keeps its mass,
         # which next iteration redistributes uniformly.  Flagging nodes
@@ -181,28 +190,24 @@ def pagerank(
                 F.col("__deg").isNull().alias("__dang"),
             )
         )
+        dm = F.sum(F.when(F.col("__dang"), F.col("rank"))).alias("dm")
         obs0 = Observation()
-        base = base.observe(
-            obs0, F.sum(F.when(F.col("__dang"), F.col("rank"))).alias("dm")
-        )
-        ranks, prev_ids = checkpoint_tracked(
-            base, reliable=reliable_checkpoint
-        )
+        ranks, base_ids = checkpoint_tracked(base.observe(obs0, dm))
         if ranks.isEmpty():
             # no nodes: the loop's observations would never fire (zero
             # tasks can mean no metrics), so return the empty result
-            # directly.  prev_ids stays persisted — those blocks back the
+            # directly.  base_ids stays persisted — those blocks back the
             # RETURNED DataFrame (a local checkpoint cannot be recomputed
             # once freed)
             unpersist_ids(spark, w_ids)
             e.unpersist()
             return ranks.select("node", "rank")
-        dangling_mass = float(obs0.get["dm"] or 0.0)
-        has_dangling = dangling_mass != 0.0
-        cadence = 1 if has_dangling else max(1, int(checkpoint_every))
+        m0 = obs0.get
         d = float(damping)
 
-        def step(r: DataFrame) -> DataFrame:
+        def step(r: DataFrame, m: dict | None) -> DataFrame:
+            # a chained step (m is None) runs only when nothing dangles
+            mass = float(m["dm"] or 0.0) if m else 0.0
             contribs = (
                 weighted.join(
                     r.select(F.col("node").alias("src"), "rank"), "src"
@@ -217,7 +222,7 @@ def pagerank(
                     + d
                     * (
                         F.coalesce(F.col("__in"), F.lit(0.0))
-                        + F.lit(dangling_mass) / F.col("__n")
+                        + F.lit(mass) / F.col("__n")
                     )
                 ).alias("rank"),
                 F.col("rank").alias("__prev"),
@@ -225,30 +230,23 @@ def pagerank(
                 "__dang",
             )
 
-        done = 0
-        while done < iterations:
-            steps = min(cadence, iterations - done)
-            stepped = ranks
-            for _ in range(steps):
-                stepped = step(stepped.drop("__prev"))
-            obs = Observation()
-            stepped = stepped.observe(
-                obs,
-                F.sum(F.when(F.col("__dang"), F.col("rank"))).alias("dm"),
-                # delta of the chain's LAST sub-step: a per-checkpoint
-                # convergence probe (the tightest of the chained steps)
+        ranks, _, _, _ = fixpoint(
+            ranks,
+            step,
+            iterations,
+            chain=_RANK_CHECKPOINT_EVERY if not m0["dm"] else 1,
+            # the delta of a chain's LAST sub-step: a per-checkpoint
+            # convergence probe (the tightest of the chained steps)
+            observe=[
+                dm,
                 F.sum(F.abs(F.col("rank") - F.col("__prev"))).alias("l1"),
-            ).drop("__prev")
-            ranks, new_ids = checkpoint_tracked(
-                stepped, reliable=reliable_checkpoint
-            )
-            unpersist_ids(spark, prev_ids)
-            prev_ids = new_ids
-            done += steps
-            got = obs.get
-            dangling_mass = float(got["dm"] or 0.0)
-            if tol is not None and float(got["l1"] or 0.0) < tol:
-                break
+            ],
+            stop=None
+            if tol is None
+            else lambda m, *_: float(m["l1"] or 0.0) < tol,
+            ids=base_ids,
+            metrics=m0,
+        )
         unpersist_ids(spark, w_ids)
         e.unpersist()
         return ranks.select("node", "rank")
@@ -261,8 +259,6 @@ def bfs_distances(
     src_col: str = "src",
     dst_col: str = "dst",
     node_col: str = "node",
-    reliable_checkpoint: bool = False,
-    _pre: tuple[DataFrame, int] | None = None,
 ) -> DataFrame:
     """Multi-source BFS: minimum hop count from ANY source node to every
     reachable node within ``max_hops`` — the influence-radius /
@@ -276,41 +272,45 @@ def bfs_distances(
 
     Plan: classic frontier iteration — join the (shrinking) frontier to
     the src-partitioned checkpointed edge list, anti-join out nodes
-    already visited, checkpoint the new frontier and release the old one
-    (the CC/PageRank lineage discipline).  Each round shuffles only
-    frontier-sized data.  ONE action per hop: the new frontier's
+    already visited, checkpoint the new frontier.  Each round shuffles
+    only frontier-sized data.  ONE action per hop: the new frontier's
     checkpoint, with its row count riding the materialization as an
     ``observe`` metric (the early-exit probe); the visited set is the
     lazy union of the per-hop frontier checkpoints — re-materializing it
     per hop bought nothing (the anti-join reads the ≤max_hops pieces
-    directly).  Loop shuffles run at an edge-count-derived partition
-    count (no-op at production scale)."""
+    directly), and those pieces back the returned DataFrame, so unlike
+    the other loops this one frees no round.  Loop shuffles run at an
+    edge-count-derived partition count (no-op at production scale)."""
     if max_hops < 0:
         raise ValueError("max_hops must be >= 0")
     spark = edges.sparkSession
-    if _pre is not None:
-        # caller-managed canonical edge table (already distinct,
-        # src-partitioned, checkpointed) + its row count: a multi-sweep
-        # composition like :func:`bow_tie_report` canonicalizes ONCE
-        # instead of per sweep; the caller owns the blocks' lifetime
-        e, n_edges = _pre
-        e_ids: set[int] = set()
-    else:
-        e0 = edges.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-        ).distinct().persist()
-        n_edges = e0.count()
+    e0 = edges.select(
+        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+    ).distinct().persist()
+    n_edges = e0.count()
     with shuffle_scope(spark, loop_partitions(spark, n_edges)):
-        if _pre is None:
-            e, e_ids = checkpoint_tracked(
-                e0.repartition("src"), reliable=reliable_checkpoint
-            )
-            e0.unpersist()
-        frontier = sources.select(F.col(node_col).alias("node")).distinct()
+        e, e_ids = checkpoint_tracked(e0.repartition("src"))
+    e0.unpersist()
+    out, _ = _bfs(
+        e, n_edges, sources.select(F.col(node_col).alias("node")), max_hops
+    )
+    unpersist_ids(spark, e_ids)
+    return out
+
+
+def _bfs(
+    e: DataFrame, n_edges: int, sources: DataFrame, max_hops: int
+) -> tuple[DataFrame, set[int]]:
+    """The frontier loop of :func:`bfs_distances` over a distinct,
+    src-partitioned edge table ``e`` of ``n_edges`` rows (the caller owns
+    its blocks) from ``sources`` (node); returns (node, distance) and the
+    ids of the frontier blocks backing it, which the caller frees once
+    it has materialized what it built on them."""
+    spark = e.sparkSession
+    with shuffle_scope(spark, loop_partitions(spark, n_edges)):
         obs = Observation()
-        frontier, f_ids = checkpoint_tracked(
-            frontier.observe(obs, F.count(F.lit(1)).alias("n")),
-            reliable=reliable_checkpoint,
+        frontier, ids = checkpoint_tracked(
+            sources.distinct().observe(obs, F.count(F.lit(1)).alias("n"))
         )
         n_frontier = int(obs.get["n"] or 0)
         # the visited set is the union of the per-hop frontier pieces;
@@ -328,25 +328,25 @@ def bfs_distances(
                 .join(visited_nodes, "node", "left_anti")
             )
             obs = Observation()
-            nxt, f_ids = checkpoint_tracked(
-                nxt.observe(obs, F.count(F.lit(1)).alias("n")),
-                reliable=reliable_checkpoint,
+            frontier, f_ids = checkpoint_tracked(
+                nxt.observe(obs, F.count(F.lit(1)).alias("n"))
             )
             n_frontier = int(obs.get["n"] or 0)
-            frontier = nxt
             if n_frontier == 0:
+                # an empty frontier backs nothing
+                unpersist_ids(spark, f_ids)
                 break
+            ids |= f_ids
             pieces.append(
                 frontier.withColumn("distance", F.lit(hop).cast("long"))
             )
             visited_nodes = visited_nodes.unionByName(
                 frontier.select("node")
             )
-        unpersist_ids(spark, e_ids)
         visited = pieces[0]
         for p in pieces[1:]:
             visited = visited.unionByName(p)
-        return visited
+        return visited, ids
 
 
 def triangle_counts(
@@ -377,8 +377,6 @@ def triangle_counts(
     closes them; every triangle is found exactly once (its corners appear
     in rank order).  The oriented edge list is persisted and shared by
     both joins, released on return."""
-    from ..caching import materialize_release
-
     # e feeds the degree union (twice) AND the orientation join; deg
     # feeds both orientation sides AND the output join — un-persisted,
     # each consumer re-ran the upstream edge build and the distinct
@@ -466,7 +464,6 @@ def coreness(
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 50,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """k-core decomposition — each node's CORE NUMBER (the largest k such
     that the node survives in the subgraph where everyone keeps ≥ k
@@ -493,12 +490,8 @@ def coreness(
     values), one per-node rank window (h-index = max min(value, rank) —
     no arrays collected, a hub's window is just its own partition), and
     one changed-count aggregate that doubles as the convergence test.
-    Core tables checkpoint every ``checkpoint_every`` rounds, releasing
-    the previous generation (the CC/PageRank lineage discipline)."""
-    from pyspark.sql import Window
-
-    from ..caching import checkpoint_tracked, unpersist_ids
-
+    Core tables checkpoint every round (:func:`~..caching.fixpoint`),
+    releasing the previous generation."""
     spark = edges.sparkSession
     e = (
         edges.select(
@@ -530,7 +523,8 @@ def coreness(
         degrees.count()
         e.unpersist()
         w = Window.partitionBy("v").orderBy(F.desc("cu"))
-        for _ in range(max_iterations):
+
+        def step(cores: DataFrame, _) -> DataFrame:
             nbr = adj.join(
                 cores.withColumnsRenamed({"v": "u", "c": "cu"}), "u"
             ).select("v", "cu")
@@ -539,43 +533,38 @@ def coreness(
                 .groupBy("v")
                 .agg(F.max(F.least(F.col("cu"), F.col("r"))).alias("h"))
             )
-            # carry the previous value through the checkpoint so the
-            # convergence count rides the materialization as an observe
-            # metric — no separate nxt-vs-cores join+count job per round
-            obs = Observation()
-            nxt = (
-                cores.join(h, "v", "left")
-                .select(
-                    "v",
-                    F.col("c").alias("__old"),
-                    F.least(
-                        F.col("c"), F.coalesce(F.col("h"), F.lit(0))
-                    ).alias("c"),
-                )
-                .observe(
-                    obs,
-                    F.sum(
-                        F.when(F.col("c") != F.col("__old"), 1).otherwise(0)
-                    ).alias("chg"),
-                )
-                .select("v", "c")
+            # carry the previous value so the convergence count rides
+            # the checkpoint — no separate nxt-vs-cores join+count job
+            return cores.join(h, "v", "left").select(
+                "v",
+                F.col("c").alias("__old"),
+                F.least(F.col("c"), F.coalesce(F.col("h"), F.lit(0))).alias(
+                    "c"
+                ),
             )
-            nxt, new_ids = checkpoint_tracked(nxt)
-            changed = int(obs.get["chg"] or 0)
-            unpersist_ids(spark, ids)
-            cores, ids = nxt, new_ids
-            if changed == 0:
-                break
+
+        cores, ids, _, _ = fixpoint(
+            cores,
+            step,
+            max_iterations,
+            observe=[
+                F.sum(
+                    F.when(F.col("c") != F.col("__old"), 1).otherwise(0)
+                ).alias("chg")
+            ],
+            stop=lambda m, *_: int(m["chg"] or 0) == 0,
+            ids=ids,
+        )
         out = degrees.join(cores, "v").select(
             F.col("v").alias("item"),
             F.col("deg").alias("degree"),
             F.col("c").alias("core"),
         )
-        from ..caching import materialize_release
-
-        out = materialize_release(out, adj, degrees)
-        unpersist_ids(spark, ids)
-        return out
+        done = materialize_release(out, adj, degrees)
+        # under the release kill-switch `out` stays lazy over the cores
+        if done is not out:
+            unpersist_ids(spark, ids)
+        return done
 
 
 def hits(
@@ -583,8 +572,6 @@ def hits(
     src_col: str = "src",
     dst_col: str = "dst",
     iterations: int = 10,
-    checkpoint_every: int = 2,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg, JACM 1999) over a directed
     edge list: (node, hub, authority), both vectors L2-normalized.  The
@@ -596,9 +583,9 @@ def hits(
 
     HITS is scale-invariant, so normalization is deferred to checkpoint
     boundaries: each cadence chain runs un-normalized (growth over
-    ``checkpoint_every`` chained steps is bounded by λ₁^(2k) ≪ double
-    range for any sane cadence), then the observed Σhub²/Σauth² scale
-    the checkpointed state as literals — no extra action per iteration.
+    ``_HITS_CHECKPOINT_EVERY`` chained steps is bounded by λ₁^(2k) ≪
+    double range), then the observed Σhub²/Σauth² scale the checkpointed
+    state as literals — no extra action per iteration.
 
     Like PageRank, scores are IEEE doubles with run-dependent last ulps
     — rows-only territory; tests pin small graphs to a dense NumPy twin
@@ -607,12 +594,11 @@ def hits(
     Plan per iteration: two partition-aligned shuffles (edges are kept
     as TWO checkpointed copies, partitioned by src for the authority
     gather and by dst for the hub gather); the per-iteration authority
-    table is persisted for its two consumers and released at the next
-    checkpoint; lineage stays bounded by the cadence."""
+    table is persisted for its two consumers and released once the
+    checkpoint that read it has landed; lineage stays bounded by the
+    cadence."""
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    if checkpoint_every < 1:
-        raise ValueError("checkpoint_every must be >= 1")
     spark = edges.sparkSession
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
@@ -624,12 +610,8 @@ def hits(
             [], "node long, hub double, authority double"
         )
     with shuffle_scope(spark, loop_partitions(spark, n_edges)):
-        e_src, src_ids = checkpoint_tracked(
-            e.repartition("src"), reliable=reliable_checkpoint
-        )
-        e_dst, dst_ids = checkpoint_tracked(
-            e_src.repartition("dst"), reliable=reliable_checkpoint
-        )
+        e_src, src_ids = checkpoint_tracked(e.repartition("src"))
+        e_dst, dst_ids = checkpoint_tracked(e_src.repartition("dst"))
         e.unpersist()
         state = (
             e_src.select(F.col("src").alias("node"))
@@ -639,71 +621,62 @@ def hits(
                 "node", F.lit(1.0).alias("auth"), F.lit(1.0).alias("hub")
             )
         )
-        prev_ids: set[int] = set()
         pending: list[DataFrame] = []
-        done = 0
-        while done < iterations:
-            steps = min(checkpoint_every, iterations - done)
-            st = state
-            for _ in range(steps):
-                a = (
-                    e_src.join(
-                        st.select(F.col("node").alias("src"), "hub"), "src"
-                    )
-                    .groupBy(F.col("dst").alias("node"))
-                    .agg(F.sum("hub").alias("auth"))
-                    .persist()
-                )
-                pending.append(a)
-                h = (
-                    e_dst.join(
-                        a.select(F.col("node").alias("dst"), "auth"), "dst"
-                    )
-                    .groupBy(F.col("src").alias("node"))
-                    .agg(F.sum("auth").alias("hub"))
-                )
-                # full outer: only-out-edge nodes miss from a,
-                # only-in-edge nodes miss from h; together they cover
-                # every node
-                st = a.join(h, "node", "full").select(
-                    "node",
-                    F.coalesce("auth", F.lit(0.0)).alias("auth"),
-                    F.coalesce("hub", F.lit(0.0)).alias("hub"),
-                )
-            obs = Observation()
-            st = st.observe(
-                obs,
-                F.sum(F.col("auth") * F.col("auth")).alias("a2"),
-                F.sum(F.col("hub") * F.col("hub")).alias("h2"),
-            )
-            ck, new_ids = checkpoint_tracked(
-                st, reliable=reliable_checkpoint
-            )
-            unpersist_ids(spark, prev_ids)
-            prev_ids = new_ids
-            for c in pending:
-                c.unpersist()
-            pending = []
-            got = obs.get
-            an = float(got["a2"] or 0.0) ** 0.5 or 1.0
-            hn = float(got["h2"] or 0.0) ** 0.5 or 1.0
-            state = ck.select(
+
+        def scaled(st: DataFrame, m: dict) -> DataFrame:
+            an = float(m["a2"] or 0.0) ** 0.5 or 1.0
+            hn = float(m["h2"] or 0.0) ** 0.5 or 1.0
+            return st.select(
                 "node",
                 (F.col("auth") / F.lit(an)).alias("auth"),
                 (F.col("hub") / F.lit(hn)).alias("hub"),
             )
-            done += steps
+
+        def step(st: DataFrame, m: dict | None) -> DataFrame:
+            if m is not None:
+                # first step after a checkpoint: rescale it, and drop the
+                # authority tables that checkpoint has consumed
+                st = scaled(st, m)
+                for c in pending:
+                    c.unpersist()
+                pending.clear()
+            a = (
+                e_src.join(st.select(F.col("node").alias("src"), "hub"), "src")
+                .groupBy(F.col("dst").alias("node"))
+                .agg(F.sum("hub").alias("auth"))
+                .persist()
+            )
+            pending.append(a)
+            h = (
+                e_dst.join(a.select(F.col("node").alias("dst"), "auth"), "dst")
+                .groupBy(F.col("src").alias("node"))
+                .agg(F.sum("auth").alias("hub"))
+            )
+            # full outer: only-out-edge nodes miss from a, only-in-edge
+            # nodes miss from h; together they cover every node
+            return a.join(h, "node", "full").select(
+                "node",
+                F.coalesce("auth", F.lit(0.0)).alias("auth"),
+                F.coalesce("hub", F.lit(0.0)).alias("hub"),
+            )
+
+        state, _, m, _ = fixpoint(
+            state,
+            step,
+            iterations,
+            chain=_HITS_CHECKPOINT_EVERY,
+            observe=[
+                F.sum(F.col("auth") * F.col("auth")).alias("a2"),
+                F.sum(F.col("hub") * F.col("hub")).alias("h2"),
+            ],
+        )
+        for c in pending:
+            c.unpersist()
         unpersist_ids(spark, src_ids)
         unpersist_ids(spark, dst_ids)
-        return state.select(
+        return scaled(state, m).select(
             "node", "hub", F.col("auth").alias("authority")
         )
-
-
-#: lazy rank steps chained per checkpoint by the integer PageRank tiers
-#: when no node dangles (dangling mass forces one eager checkpoint per
-#: step: see :func:`_rank_nano`)
-_RANK_CHECKPOINT_EVERY = 3
 
 
 def _canonical_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
@@ -715,6 +688,18 @@ def _canonical_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .dropDuplicates(["src", "dst"])
     )
+
+
+def _both_directions(e: DataFrame) -> tuple[DataFrame, DataFrame, set[int]]:
+    """Checkpoints of the (src, dst) table ``e`` forward and reversed,
+    both hash-partitioned on the gather key ``src``, and their block
+    ids."""
+    fwd, f_ids = checkpoint_tracked(e.repartition("src"))
+    rev, r_ids = checkpoint_tracked(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        .repartition("src")
+    )
+    return fwd, rev, f_ids | r_ids
 
 
 def _rank_nano(
@@ -826,7 +811,6 @@ def _rank_nano(
         seed_base = ((100 - d) * n_nodes * unit // 100) // ns
         init_share = n_nodes * unit // ns
         dm = int(st["di"] or 0) + int(st["dn"]) * init_share
-        cadence = 1 if int(st["nd"]) else _RANK_CHECKPOINT_EVERY
         with shuffle_scope(spark, loop_partitions(spark, int(st["ne"] or 0))):
             # Σw_out folded INTO the edge table once, hash-partitioned on
             # src: each iteration then costs exactly TWO exchanges (the
@@ -856,9 +840,11 @@ def _rank_nano(
                 .cast("long")
                 .alias("rank_nano"),
             )
-            live: set[int] = set()
-            for i in range(int(iterations)):
-                ds = dm // ns  # ranks >= 0: // == div
+
+            def step(m: DataFrame, got: dict | None) -> DataFrame:
+                # ranks >= 0: // == div; a chained step (got is None)
+                # runs only when nothing dangles
+                ds = (int(got["dm"] or 0) if got else 0) // ns
                 incoming = (
                     we.join(
                         m.select(F.col("node").alias("src"), "rank_nano"),
@@ -871,7 +857,7 @@ def _rank_nano(
                         .alias("inc")
                     )
                 )
-                m = marked.join(incoming, "node", "left").select(
+                return marked.join(incoming, "node", "left").select(
                     "node",
                     "__dang",
                     (
@@ -882,15 +868,15 @@ def _rank_nano(
                         )
                     ).cast("long").alias("rank_nano"),
                 )
-                if (i + 1) % cadence == 0 or i == iterations - 1:
-                    obs = Observation()
-                    m = m.observe(
-                        obs, F.sum(F.when(dang, F.col("rank_nano"))).alias("dm")
-                    )
-                    m, ids = checkpoint_tracked(m)
-                    unpersist_ids(spark, live)
-                    live = ids
-                    dm = int(obs.get["dm"] or 0)
+
+            m, _, _, _ = fixpoint(
+                m,
+                step,
+                int(iterations),
+                chain=_RANK_CHECKPOINT_EVERY if not int(st["nd"]) else 1,
+                observe=[F.sum(F.when(dang, F.col("rank_nano"))).alias("dm")],
+                metrics={"dm": dm},
+            )
             return m.select("node", "rank_nano")
     finally:
         for df_ in cached:
@@ -920,17 +906,11 @@ def pagerank_integer(
     schedule is what a SQL twin replays exactly.
 
     Returns (node, rank_nano).  Same per-iteration shape as the float
-    tier: one rank-to-src join against an out-degree-annotated,
-    src-partitioned persisted edge table + one dst aggregation (two
-    exchanges total); when dangling nodes exist their mass total rides
-    each checkpoint action as an ``observe`` metric and enters the next
-    step as an int literal (never a lazy broadcast subquery: the r11
-    chain A/B measured that alternative and it lost — AQE does not
-    stage-cache-reuse the subquery's subtree, so it re-executes the
-    edge join per inner step; see :func:`_rank_nano`), which forces
-    the cadence to 1; with none, lazy steps chain three per checkpoint.
-    The dangling count comes from the one preflight aggregate, so a
-    graph without dangling nodes (a symmetrized one) pays nothing extra.
+    tier (:func:`_rank_nano`): one rank-to-src join against an
+    out-degree-annotated, src-partitioned persisted edge table + one dst
+    aggregation (two exchanges); dangling mass rides each checkpoint as
+    an ``observe`` metric, which forces the cadence to 1, and without
+    dangling nodes lazy steps chain three per checkpoint.
 
     ``init_ranks`` (node, rank_nano) warm-starts iteration 0 from a
     PREVIOUS run's vector instead of ``unit`` everywhere (nodes absent
@@ -1040,7 +1020,9 @@ def hits_incremental(
     All-BIGINT fixed schedule: the result is a deterministic integer
     function of (stored hubs, merged edges) a SQL twin replays exactly.
 
-    Returns (node, hub_units, auth_units) over the MERGED graph."""
+    Returns (node, hub_units, auth_units) over the MERGED graph.  Raises
+    ``ValueError`` when a stored ``hub_units`` is negative (integer L1
+    normalization floors only non-negative shares)."""
     merged = fold_edges(edges, new_edges, src_col=src_col, dst_col=dst_col)
     return hits_integer(
         merged,
@@ -1101,45 +1083,57 @@ def strongly_connected_components(
     it as an observe metric (three actions per round become one); loop
     shuffles run at an edge-count-derived partition count
     (:func:`~..partitioning.loop_partitions`, no-op at scale)."""
-    from ..caching import checkpoint_tracked, unpersist_ids
+    return _scc(edges, src_col, dst_col, max_rounds, max_inner)[0]
 
+
+def _scc(
+    edges: DataFrame,
+    src_col: str,
+    dst_col: str,
+    max_rounds: int,
+    max_inner: int = 64,
+) -> tuple[DataFrame, set[int]]:
+    """:func:`strongly_connected_components` plus the ids of the per-round
+    checkpoint blocks its lazy union reads, for a caller that frees them
+    once it has materialized what it built on the components."""
     if max_rounds < 1 or max_inner < 1:
         raise ValueError("max_rounds and max_inner must be >= 1")
     spark = edges.sparkSession
-    e0 = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .dropDuplicates(["src", "dst"])
+    # both counts ride their checkpoints as observe metrics
+    n = F.count(F.lit(1)).alias("n")
+    obs = Observation()
+    e0, e0_ids = checkpoint_tracked(
+        _canonical_edges(edges, src_col, dst_col).observe(obs, n)
     )
-    e0, e0_ids = checkpoint_tracked(e0)
-    n_edges = e0.count()
+    n_edges = int(obs.get["n"])
     with shuffle_scope(spark, loop_partitions(spark, n_edges)):
         rem = (
             e0.select(F.col("src").alias("node"))
             .unionByName(e0.select(F.col("dst").alias("node")))
             .distinct()
         )
-        rem, rem_ids = checkpoint_tracked(rem)
-        n_rem = rem.count()
-        sube, sube_ids = e0, set()
-        sube_is_partitioned = False
+        obs = Observation()
+        rem, rem_ids = checkpoint_tracked(rem.observe(obs, n))
+        n_rem = int(obs.get["n"])
+        # both gather directions, hash-partitioned on the gather key, so
+        # each inner step re-exchanges only labels
+        sube_fwd, sube_rev, sub_ids = _both_directions(e0)
+        unpersist_ids(spark, e0_ids)
         done_parts: list[DataFrame] = []
-        done_part_ids: list[set[int]] = []
+        done_ids: set[int] = set()
 
         def _min_fixpoint(edges_dir: DataFrame, nodes: DataFrame) -> tuple:
             """labels (node, lab) after propagating min over in-edges of
             ``edges_dir`` to fixpoint; returns (labels, live_block_ids).
-            Two sub-steps chain per checkpoint; the observed change count
-            of the LAST sub-step being zero certifies the fixpoint."""
-            lab = nodes.withColumn("lab", F.col("node"))
-            lab, live = checkpoint_tracked(lab)
+            Sub-steps chain ``_SCC_CHAIN`` per checkpoint; the observed
+            change count of the LAST sub-step being zero certifies the
+            fixpoint.  The first round reads ``nodes`` (blocks the
+            caller owns) directly, so the start needs no checkpoint."""
 
-            def _step(cur: DataFrame) -> DataFrame:
+            def step(cur: DataFrame, _) -> DataFrame:
                 contrib = (
                     edges_dir.join(
-                        cur.select(
-                            F.col("node").alias("src"), F.col("lab")
-                        ),
+                        cur.select(F.col("node").alias("src"), F.col("lab")),
                         "src",
                     )
                     .groupBy(F.col("dst").alias("node"))
@@ -1156,29 +1150,20 @@ def strongly_connected_components(
                         "__old",
                     )
                 )
-            done_steps = 0
-            while done_steps < int(max_inner):
-                steps = min(int(_SCC_CHAIN), int(max_inner) - done_steps)
-                new = lab
-                for _ in range(steps):
-                    new = _step(new.select("node", "lab"))
-                obs = Observation()
-                new = new.observe(
-                    obs,
+
+            lab, live, _, converged = fixpoint(
+                nodes.withColumn("lab", F.col("node")),
+                step,
+                int(max_inner),
+                chain=_SCC_CHAIN,
+                observe=[
                     F.sum(
-                        F.when(F.col("lab") < F.col("__old"), 1).otherwise(
-                            0
-                        )
-                    ).alias("chg"),
-                ).select("node", "lab")
-                new, ids = checkpoint_tracked(new)
-                unpersist_ids(spark, live)
-                live = ids
-                lab = new
-                done_steps += steps
-                if int(obs.get["chg"] or 0) == 0:
-                    break
-            else:
+                        F.when(F.col("lab") < F.col("__old"), 1).otherwise(0)
+                    ).alias("chg")
+                ],
+                stop=lambda m, *_: int(m["chg"] or 0) == 0,
+            )
+            if not converged:
                 raise ValueError(
                     f"min-label propagation did not converge in "
                     f"{max_inner} steps; raise max_inner"
@@ -1188,19 +1173,6 @@ def strongly_connected_components(
         for _ in range(int(max_rounds)):
             if n_rem == 0:
                 break
-            if not sube_is_partitioned:
-                # both gather directions, hash-partitioned on the gather
-                # key, so each inner step re-exchanges only labels
-                sube_fwd, sf_ids = checkpoint_tracked(
-                    sube.repartition("src")
-                )
-                sube_rev, sr_ids = checkpoint_tracked(
-                    sube.select(
-                        F.col("dst").alias("src"), F.col("src").alias("dst")
-                    ).repartition("src")
-                )
-                unpersist_ids(spark, sube_ids)
-                sube_is_partitioned = True
             f_lab, f_ids = _min_fixpoint(sube_fwd, rem)
             b_lab, b_ids = _min_fixpoint(sube_rev, rem)
             # ONE checkpoint holds both the round's assignments and the
@@ -1221,40 +1193,32 @@ def strongly_connected_components(
                 "node", F.col("lab").alias("scc_id")
             )
             done_parts.append(assigned)
-            done_part_ids.append(both_ids)
+            done_ids |= both_ids
             new_rem = both.where(F.col("lab") != F.col("__b")).select(
                 "node"
             )
             unpersist_ids(spark, f_ids | b_ids | rem_ids)
             rem, rem_ids = new_rem, set()
             if n_rem == 0:
-                unpersist_ids(spark, sf_ids | sr_ids)
                 break
-            new_sube = sube_fwd.join(
-                new_rem.withColumnRenamed("node", "src"), "src", "semi"
-            ).join(new_rem.withColumnRenamed("node", "dst"), "dst", "semi")
-            sube_fwd2, sf2_ids = checkpoint_tracked(
-                new_sube.repartition("src")
+            nxt = _both_directions(
+                sube_fwd.join(
+                    new_rem.withColumnRenamed("node", "src"), "src", "semi"
+                ).join(new_rem.withColumnRenamed("node", "dst"), "dst", "semi")
             )
-            sube_rev2, sr2_ids = checkpoint_tracked(
-                new_sube.select(
-                    F.col("dst").alias("src"), F.col("src").alias("dst")
-                ).repartition("src")
-            )
-            unpersist_ids(spark, sf_ids | sr_ids)
-            sube_fwd, sf_ids = sube_fwd2, sf2_ids
-            sube_rev, sr_ids = sube_rev2, sr2_ids
+            unpersist_ids(spark, sub_ids)
+            sube_fwd, sube_rev, sub_ids = nxt
         else:
             if n_rem != 0:
                 raise ValueError(
                     f"SCC peeling did not finish in {max_rounds} rounds;"
                     " raise max_rounds"
                 )
-        unpersist_ids(spark, e0_ids)
+        unpersist_ids(spark, sub_ids)
         out = done_parts[0]
         for p_ in done_parts[1:]:
             out = out.unionByName(p_)
-        return out
+        return out, done_ids
 
 
 def bow_tie_report(
@@ -1283,10 +1247,13 @@ def bow_tie_report(
     ``detailed=True`` refines OTHER into the full Broder taxonomy with
     two more sweeps (forward from IN, backward from OUT): ``TUBE``
     (an IN→OUT path that bypasses the core), ``TENDRIL`` (hangs off IN
-    or feeds OUT, one-sided), ``DISCONNECTED`` (touches none of it)."""
-    scc = strongly_connected_components(
-        edges, src_col=src_col, dst_col=dst_col, max_rounds=max_rounds
-    ).persist()
+    or feeds OUT, one-sided), ``DISCONNECTED`` (touches none of it).
+
+    The result is materialized; the SCC round checkpoints and every
+    sweep's frontier blocks it was built on are freed (kept, with the
+    plan lazy, under ``spark.sparkplug.release.enabled=false``)."""
+    scc, ids = _scc(edges, src_col, dst_col, max_rounds)
+    scc = scc.persist()
     core_row = (
         scc.groupBy("scc_id")
         .agg(F.count(F.lit(1)).alias("__n"))
@@ -1296,34 +1263,23 @@ def bow_tie_report(
     )
     core_id = core_row["scc_id"]
     core = scc.where(F.col("scc_id") == F.lit(core_id)).select("node")
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    )
     # canonicalize the edge table ONCE for every sweep (2 plain, 4
-    # detailed): each bfs_distances call otherwise re-runs the distinct
-    # + count + src-partitioned checkpoint over the full edge set.  Both
-    # gather directions are checkpointed; blocks released after the last
-    # sweep (the BFS outputs are eager checkpoints of their own).
-    from ..caching import checkpoint_tracked, unpersist_ids
-    from ..partitioning import loop_partitions, shuffle_scope
-
+    # detailed): both gather directions are checkpointed and freed after
+    # the last sweep (the sweeps' frontiers are checkpoints of their own)
     spark = edges.sparkSession
-    e0 = e.distinct().persist()
+    e0 = _canonical_edges(edges, src_col, dst_col).persist()
     n_e = e0.count()
     with shuffle_scope(spark, loop_partitions(spark, n_e)):
-        e_fwd, ef_ids = checkpoint_tracked(e0.repartition("src"))
-        e_rev, er_ids = checkpoint_tracked(
-            e0.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            ).repartition("src")
-        )
+        e_fwd, e_rev, e_ids = _both_directions(e0)
     e0.unpersist()
-    fwd = bfs_distances(
-        e_fwd, core, max_hops=max_hops, _pre=(e_fwd, n_e)
-    ).select("node")
-    rev = bfs_distances(
-        e_rev, core, max_hops=max_hops, _pre=(e_rev, n_e)
-    ).select("node")
+
+    def reach(e: DataFrame, seeds: DataFrame) -> DataFrame:
+        out, sweep_ids = _bfs(e, n_e, seeds, max_hops)
+        ids.update(sweep_ids)
+        return out.select("node")
+
+    fwd = reach(e_fwd, core)
+    rev = reach(e_rev, core)
     out = (
         scc.join(fwd.withColumn("__out", F.lit(True)), "node", "left")
         .join(rev.withColumn("__in", F.lit(True)), "node", "left")
@@ -1337,61 +1293,58 @@ def bow_tie_report(
             .alias("region"),
         )
     )
-    from ..caching import materialize_release
-
-    if not detailed:
-        res = materialize_release(out, scc)
-        unpersist_ids(spark, ef_ids | er_ids)
-        return res
-    base = out.persist()
-    in_nodes = base.where(F.col("region") == "IN").select("node")
-    out_nodes = base.where(F.col("region") == "OUT").select("node")
-    # seed the refinement sweeps with the reach sets already computed:
-    # when IN is non-empty every IN node reaches the core, so
-    # reach(core) = fwd ⊆ reach(IN) and reach(IN ∪ fwd) = reach(IN) —
-    # identical result, but the sweep explores only past the known
-    # region (tubes/tendrils) instead of re-walking the core's whole
-    # forward cone; symmetrically rev ⊆ reverse-reach(OUT) when OUT is
-    # non-empty.  Empty region ⇒ seed unaugmented (reach must be empty).
-    region_n = {
-        r["region"]: r["n"]
-        for r in base.groupBy("region")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    fi_seeds = (
-        in_nodes.unionByName(fwd) if region_n.get("IN") else in_nodes
-    )
-    to_seeds = (
-        out_nodes.unionByName(rev) if region_n.get("OUT") else out_nodes
-    )
-    from_in = bfs_distances(
-        e_fwd, fi_seeds, max_hops=max_hops, _pre=(e_fwd, n_e)
-    ).select("node")
-    to_out = bfs_distances(
-        e_rev, to_seeds, max_hops=max_hops, _pre=(e_rev, n_e)
-    ).select("node")
-    unpersist_ids(spark, ef_ids | er_ids)
-    refined = (
-        base.join(from_in.withColumn("__fi", F.lit(True)), "node", "left")
-        .join(to_out.withColumn("__to", F.lit(True)), "node", "left")
-        .select(
-            "node",
-            "scc_id",
-            F.when(F.col("region") != "OTHER", F.col("region"))
-            .when(
-                F.col("__fi").isNotNull() & F.col("__to").isNotNull(),
-                F.lit("TUBE"),
-            )
-            .when(
-                F.col("__fi").isNotNull() | F.col("__to").isNotNull(),
-                F.lit("TENDRIL"),
-            )
-            .otherwise(F.lit("DISCONNECTED"))
-            .alias("region"),
+    cached = [scc]
+    if detailed:
+        base = out.persist()
+        cached.append(base)
+        in_nodes = base.where(F.col("region") == "IN").select("node")
+        out_nodes = base.where(F.col("region") == "OUT").select("node")
+        # seed the refinement sweeps with the reach sets already
+        # computed: when IN is non-empty every IN node reaches the core,
+        # so reach(core) = fwd ⊆ reach(IN) and reach(IN ∪ fwd) =
+        # reach(IN) — identical result, but the sweep explores only past
+        # the known region (tubes/tendrils) instead of re-walking the
+        # core's whole forward cone; symmetrically rev ⊆
+        # reverse-reach(OUT) when OUT is non-empty.  Empty region ⇒ seed
+        # unaugmented (reach must be empty).
+        region_n = {
+            r["region"]: r["n"]
+            for r in base.groupBy("region")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
+        fi_seeds = (
+            in_nodes.unionByName(fwd) if region_n.get("IN") else in_nodes
         )
-    )
-    return materialize_release(refined, scc, base)
+        to_seeds = (
+            out_nodes.unionByName(rev) if region_n.get("OUT") else out_nodes
+        )
+        from_in = reach(e_fwd, fi_seeds)
+        to_out = reach(e_rev, to_seeds)
+        out = (
+            base.join(from_in.withColumn("__fi", F.lit(True)), "node", "left")
+            .join(to_out.withColumn("__to", F.lit(True)), "node", "left")
+            .select(
+                "node",
+                "scc_id",
+                F.when(F.col("region") != "OTHER", F.col("region"))
+                .when(
+                    F.col("__fi").isNotNull() & F.col("__to").isNotNull(),
+                    F.lit("TUBE"),
+                )
+                .when(
+                    F.col("__fi").isNotNull() | F.col("__to").isNotNull(),
+                    F.lit("TENDRIL"),
+                )
+                .otherwise(F.lit("DISCONNECTED"))
+                .alias("region"),
+            )
+        )
+    res = materialize_release(out, *cached)
+    unpersist_ids(spark, e_ids)
+    if res is not out:
+        unpersist_ids(spark, ids)
+    return res
 
 
 def hits_integer(
@@ -1435,7 +1388,7 @@ def hits_integer(
     job per iteration (the lazy-broadcast subplan was the r5 68 s
     regression class; the r11 chain A/B re-measured every chaining
     alternative and none beat one observe-riding checkpoint per
-    iteration — see the module note above _SCC_CHAIN).  The FINAL
+    iteration — see the module note above _RANK_CHECKPOINT_EVERY).  The FINAL
     iteration checkpoints the authority gather first (its L1 total
     riding that materialization), so the output authority vector is a
     projection of blocks the loop computed anyway instead of a second
@@ -1450,9 +1403,6 @@ def hits_integer(
     coalesce these; at production scale the derivation clamps to the
     session's configured partitions and is a no-op.  Round N-1's blocks
     are freed as soon as round N's checkpoint lands."""
-    from ..caching import checkpoint_tracked, materialize_release, unpersist_ids
-    from ..partitioning import loop_partitions, shuffle_scope
-
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
     if assume_canonical:
@@ -1505,24 +1455,31 @@ def hits_integer(
         e_src = e.repartition("src").persist()
         e_dst = e.repartition("dst").persist()
 
-        def _l1_normalize(df, col):
-            # EAGER local checkpoint; the L1 total rides its
-            # materialization as an observe metric and enters the next
-            # step as an int literal (a lazy broadcast subplan would
-            # recompute the un-checkpointed chain — the r5 class)
+        def _l1_normalize(df, col, *probes):
+            # EAGER local checkpoint; the L1 total (and any extra
+            # ``probes``) ride its materialization as observe metrics and
+            # the total enters the next step as an int literal (a lazy
+            # broadcast subplan would recompute the un-checkpointed chain
+            # — the r5 class).  Spark's `div` truncates toward zero, so
+            # `x * unit div total` is the floor the SQL twins replay only
+            # for non-negative operands: the gathers sum non-negative
+            # hubs, and the warm start rejects a negative stored hub.
             obs = Observation()
             df = df.observe(
                 obs,
                 F.greatest(F.sum(col), F.lit(1)).cast("long").alias("__t"),
+                *probes,
             )
             df, ids = checkpoint_tracked(df)
-            tot = int(obs.get["__t"])
+            got = obs.get
+            tot = int(got["__t"])
             return (
                 df.select(
                     "node",
                     F.expr(f"{col} * {int(unit)}L div {tot}L").alias(col),
                 ),
                 ids,
+                got,
             )
 
         # iteration-0 L1 normalization of the constant start vector: floor
@@ -1548,7 +1505,18 @@ def hits_integer(
                 .cast("long")
                 .alias("hub_units"),
             )
-            hub, prev_ids = _l1_normalize(hub0, "hub_units")
+            hub, prev_ids, got = _l1_normalize(
+                hub0, "hub_units", F.min("hub_units").alias("__min")
+            )
+            if got["__min"] is not None and got["__min"] < 0:
+                for df_ in (e, nodes, e_src, e_dst):
+                    df_.unpersist()
+                unpersist_ids(spark, prev_ids)
+                raise ValueError(
+                    "init_hubs holds a negative hub_units "
+                    f"({got['__min']}): stored hub vectors are "
+                    "non-negative integer shares of unit"
+                )
         araw = None
         for i in range(int(iterations)):
             final = i == int(iterations) - 1
@@ -1590,13 +1558,12 @@ def hits_integer(
                 .groupBy(F.col("src").alias("node"))
                 .agg(F.sum("auth_units").cast("long").alias("hub_units"))
             )
-            # one checkpoint+observe per iteration: the r11 chain A/B
-            # measured every lazy-chaining alternative (subquery totals,
-            # node-sized identity totals) and none beat this — see the
-            # module-level note above _SCC_CHAIN
-            hub, ids = _l1_normalize(hraw, "hub_units")
+            # one checkpoint+observe per iteration (module note above
+            # _RANK_CHECKPOINT_EVERY: no lazy chaining beat it)
+            hub, ids, _ = _l1_normalize(hraw, "hub_units")
             unpersist_ids(spark, prev_ids)
             prev_ids = ids
+        # non-negative operands: `div` is the floor here too (see above)
         auth = araw.select(
             "node",
             F.expr(f"auth_units * {int(unit)}L div {tot_a}L").alias(
@@ -1633,7 +1600,6 @@ def label_propagation(
     iterations: int = 4,
     src_col: str = "src",
     dst_col: str = "dst",
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Community detection by SYNCHRONOUS label propagation (Raghavan,
     Albert & Kumara 2007, the deterministic variant): every node starts
@@ -1658,8 +1624,6 @@ def label_propagation(
     labels, and releases the previous round's blocks — per-round shuffle
     is edge-count rows of 24 bytes, the lineage-truncation discipline of
     the other iterative loops."""
-    from pyspark.sql import Window
-
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
     spark = edges.sparkSession
@@ -1674,35 +1638,30 @@ def label_propagation(
         # partitioned on d — the key every round's label join uses (the
         # old hash(s) layout re-exchanged the full edge set per round);
         # partition count derived from the edge count (no-op at scale)
-        e, e_ids = checkpoint_tracked(
-            e0.repartition("d"), reliable=reliable_checkpoint
-        )
+        e, e_ids = checkpoint_tracked(e0.repartition("d"))
         e0.unpersist()
-        labels = e.select(F.col("s").alias("node")).distinct().select(
-            "node", F.col("node").alias("label")
-        )
         labels, l_ids = checkpoint_tracked(
-            labels, reliable=reliable_checkpoint
+            e.select(F.col("s").alias("node"))
+            .distinct()
+            .select("node", F.col("node").alias("label"))
         )
         w = Window.partitionBy("node").orderBy(
             F.desc("__c"), F.asc("label")
         )
-        for _ in range(iterations):
+
+        def step(labels: DataFrame, _) -> DataFrame:
             counts = (
                 e.join(labels.withColumnRenamed("node", "d"), "d")
                 .groupBy(F.col("s").alias("node"), "label")
                 .agg(F.count(F.lit(1)).alias("__c"))
             )
-            nxt = (
+            return (
                 counts.withColumn("__rk", F.row_number().over(w))
                 .filter(F.col("__rk") == 1)
                 .select("node", "label")
             )
-            nxt, n_ids = checkpoint_tracked(
-                nxt, reliable=reliable_checkpoint
-            )
-            unpersist_ids(spark, l_ids)
-            labels, l_ids = nxt, n_ids
+
+        labels, _, _, _ = fixpoint(labels, step, iterations, ids=l_ids)
         unpersist_ids(spark, e_ids)
         return labels.select(
             "node", F.col("label").cast("long").alias("label")

@@ -14,10 +14,15 @@ not expressible as one SQL query (driver records the rows-only check).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..caching import checkpoint_tracked, unpersist_ids
+from ..caching import (
+    checkpoint_tracked,
+    fixpoint,
+    materialize_release,
+    unpersist_ids,
+)
 from ..partitioning import loop_partitions, shuffle_scope
 
 __all__ = [
@@ -72,60 +77,54 @@ def connected_components_star(
         F.sum(h.cast("decimal(38,0)")).alias("hs"),
         F.bit_xor(h).alias("hx"),
     )
-    prev = tuple(e.agg(*_stat_aggs).first())
-    prev_ids = e_ids
-    converged = False
+    prev = e.agg(*_stat_aggs).first().asDict()
+
+    def step(e: DataFrame, _) -> DataFrame:
+        # large-star: every node x links its LARGER neighbors to
+        # min(N(x) ∪ {x})
+        adj = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        mins = adj.groupBy("u").agg(
+            F.least(F.min("v"), F.first("u")).alias("m")
+        )
+        ls = (
+            adj.join(mins, "u")
+            .filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .distinct()
+        )
+        # small-star: direct edges at the larger endpoint x; link every
+        # smaller neighbor (and x itself) to min(N(x))
+        directed = ls.select(
+            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+        ).filter(F.col("u") != F.col("v"))
+        smins = directed.groupBy("u").agg(F.min("v").alias("m"))
+        return (
+            directed.join(smins, "u")
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .union(smins.select(F.col("u"), F.col("m").alias("v")))
+            .filter(F.col("u") != F.col("v"))
+            .select(
+                F.least("u", "v").alias("l"),
+                F.greatest("u", "v").alias("g"),
+            )
+            .select(F.col("g").alias("u"), F.col("l").alias("v"))
+            .distinct()
+        )
+
     with shuffle_scope(spark, loop_partitions(spark, n_edges)):
-        for _ in range(max_iterations):
-            # large-star: every node x links its LARGER neighbors to
-            # min(N(x) ∪ {x})
-            adj = e.union(
-                e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            )
-            mins = adj.groupBy("u").agg(
-                F.least(F.min("v"), F.first("u")).alias("m")
-            )
-            ls = (
-                adj.join(mins, "u")
-                .filter(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .distinct()
-            )
-            # small-star: direct edges at the larger endpoint x; link every
-            # smaller neighbor (and x itself) to min(N(x))
-            directed = ls.select(
-                F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-            ).filter(F.col("u") != F.col("v"))
-            smins = directed.groupBy("u").agg(F.min("v").alias("m"))
-            ss = (
-                directed.join(smins, "u")
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .union(smins.select(F.col("u"), F.col("m").alias("v")))
-                .filter(F.col("u") != F.col("v"))
-                .select(
-                    F.least("u", "v").alias("l"),
-                    F.greatest("u", "v").alias("g"),
-                )
-                .select(F.col("g").alias("u"), F.col("l").alias("v"))
-                .distinct()
-            )
-            obs = Observation()
-            new_e, new_ids = checkpoint_tracked(
-                ss.observe(obs, *_stat_aggs), reliable=reliable_checkpoint
-            )
-            got = obs.get
-            cur = (got["n"], got["hs"], got["hx"])
-            same = (
-                cur == prev and new_e.exceptAll(e).limit(1).count() == 0
-            )
-            # round N-1's blocks are dead once round N is materialized and
-            # the exceptAll probe above has consumed them (the final
-            # round's blocks back the returned DataFrame and must stay)
-            unpersist_ids(spark, prev_ids)
-            e, prev, prev_ids = new_e, cur, new_ids
-            if same:
-                converged = True
-                break
+        e, _, _, converged = fixpoint(
+            e,
+            step,
+            max_iterations,
+            observe=_stat_aggs,
+            # matching stats are confirmed by an exact exceptAll against
+            # round N-1, which stays readable until the stop test is done
+            stop=lambda m, m0, new, old: m == m0
+            and new.exceptAll(old).limit(1).count() == 0,
+            ids=e_ids,
+            metrics=prev,
+            reliable=reliable_checkpoint,
+        )
     if not converged:
         raise RuntimeError(
             f"connected_components_star did not converge within "
@@ -185,9 +184,8 @@ def near_dup_groups(
                 F.col("src").alias("id"), F.least("src", "__m").alias("label")
             )
         )
-        changed = -1
-        prev_ids: set[int] = set()
-        for _ in range(max_iterations):
+
+        def step(labels: DataFrame, _) -> DataFrame:
             # candidate labels: own label + each neighbor's label; adopt
             # the min
             nbr = (
@@ -200,45 +198,35 @@ def near_dup_groups(
                 .groupBy("src")
                 .agg(F.min("nbr_label").alias("nbr_label"))
             )
-            # carry the previous label through the checkpoint and let the
-            # convergence count ride its materialization as an observe
-            # metric — no separate scan job per round
-            obs = Observation()
-            staged, new_ids = checkpoint_tracked(
-                labels.join(
-                    nbr.withColumnsRenamed({"src": "id"}), "id", "left"
-                )
-                .select(
-                    "id",
-                    F.col("label").alias("__old"),
-                    F.least(
-                        F.col("label"),
-                        F.coalesce(F.col("nbr_label"), F.col("label")),
-                    ).alias("label"),
-                )
-                .observe(
-                    obs,
-                    F.sum(
-                        F.when(
-                            F.col("label") != F.col("__old"), 1
-                        ).otherwise(0)
-                    ).alias("chg"),
-                ),
-                reliable=reliable_checkpoint,
+            # carry the previous label so the convergence count rides
+            # the checkpoint — no separate scan job per round
+            return labels.join(
+                nbr.withColumnsRenamed({"src": "id"}), "id", "left"
+            ).select(
+                "id",
+                F.col("label").alias("__old"),
+                F.least(
+                    F.col("label"),
+                    F.coalesce(F.col("nbr_label"), F.col("label")),
+                ).alias("label"),
             )
-            changed = int(obs.get["chg"] or 0)
-            # free round N-1's label blocks (the current round's blocks
-            # back `staged`, which the next round — or the returned
-            # DataFrame — reads)
-            unpersist_ids(spark, prev_ids)
-            prev_ids = new_ids
-            labels = staged.select("id", "label")
-            if changed == 0:
-                break
+
+        labels, _, _, converged = fixpoint(
+            labels,
+            step,
+            max_iterations,
+            observe=[
+                F.sum(
+                    F.when(F.col("label") != F.col("__old"), 1).otherwise(0)
+                ).alias("chg")
+            ],
+            stop=lambda m, *_: int(m["chg"] or 0) == 0,
+            reliable=reliable_checkpoint,
+        )
         # the edge blocks are dead once the loop has converged: the
         # returned DataFrame reads only the final round's checkpoint
         unpersist_ids(spark, edge_ids)
-        if changed != 0:
+        if not converged:
             raise RuntimeError(
                 f"near_dup_groups did not converge within {max_iterations} "
                 "iterations — component diameter exceeds the cap; raise "
@@ -498,6 +486,4 @@ def consensus_records(
             for attr in attr_cols
         ],
     )
-    from ..caching import materialize_release
-
     return materialize_release(out, lab)

@@ -60,11 +60,17 @@ class TestHits:
         assert h2 == pytest.approx(1.0, abs=1e-12)
         assert a2 == pytest.approx(1.0, abs=1e-12)
 
-    def test_cadence_invariant(self, spark):
+    def test_cadence_invariant(self, spark, monkeypatch):
+        from sparkplug_spark.operators import graphs
+
         pairs = [(i, (i * 3) % 7) for i in range(7)] + [(0, 5), (2, 6)]
         e = _edges(spark, pairs)
-        r1 = {r["node"]: r for r in hits(e, iterations=6, checkpoint_every=1).collect()}
-        r3 = {r["node"]: r for r in hits(e, iterations=6, checkpoint_every=3).collect()}
+
+        def run(every):
+            monkeypatch.setattr(graphs, "_HITS_CHECKPOINT_EVERY", every)
+            return {r["node"]: r for r in hits(e, iterations=6).collect()}
+
+        r1, r3 = run(1), run(3)
         for n in r1:
             assert r1[n]["hub"] == pytest.approx(r3[n]["hub"], abs=1e-12)
             assert r1[n]["authority"] == pytest.approx(r3[n]["authority"], abs=1e-12)
@@ -78,6 +84,22 @@ class TestHits:
 
 
 class TestHitsInteger:
+    def test_warm_start_rejects_a_negative_stored_hub(self, spark):
+        from sparkplug_spark.operators import hits_incremental, hits_integer
+
+        e = _edges(spark, [(1, 2), (2, 3), (3, 1), (1, 3)])
+        hubs = spark.createDataFrame(
+            [(1, 400000), (2, -1), (3, 300000)], "node long, hub_units long"
+        )
+        registry = spark.sparkContext._jsc.getPersistentRDDs
+        before = set(registry().keySet().toArray())
+        with pytest.raises(ValueError, match="negative hub_units"):
+            hits_integer(e, iterations=2, init_hubs=hubs)
+        with pytest.raises(ValueError, match="negative hub_units"):
+            hits_incremental(hubs, e, _edges(spark, [(3, 2)]), iterations=2)
+        # the working set is released before raising
+        assert set(registry().keySet().toArray()) - before == set()
+
     def test_partition_invariant_and_tracks_float_ranking(self, spark):
         from sparkplug_spark.operators import hits, hits_integer
 

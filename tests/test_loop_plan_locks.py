@@ -103,6 +103,83 @@ def _driver_actions(spark, monkeypatch, fn):
     return calls
 
 
+def _seq(jseq):
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def _tree(plan):
+    """(name, one-line text, output column names, children) of a JVM
+    physical plan; cached subplans (an InMemoryTableScan's relation) are
+    not children, so they are left out."""
+    return (
+        plan.nodeName(),
+        plan.simpleString(25),
+        {a.name() for a in _seq(plan.output())},
+        [_tree(c) for c in _seq(plan.children())],
+    )
+
+
+def _exchanges_down(node):
+    """Exchanges from ``node`` down to the first join/aggregate/leaf."""
+    name, text, _, kids = node
+    if "Join" in name or "Aggregate" in name:
+        return []
+    here = [text] if "Exchange" in name else []
+    return here + [x for k in kids for x in _exchanges_down(k)]
+
+
+def _reads_edges(node):
+    """The InMemoryTableScan of a cached edge table (src and dst columns)
+    under ``node`` above any join or aggregate, and the texts of the nodes
+    on the way down to it."""
+    name, text, cols, kids = node
+    if name == "InMemoryTableScan" and {"src", "dst"} <= cols:
+        return [text]
+    if "Join" in name or "Aggregate" in name:
+        return []
+    for k in kids:
+        path = _reads_edges(k)
+        if path:
+            return [text] + path
+    return []
+
+
+def _gathers(node, up=()):
+    """One (exchanges, edge-side path) per gather in the plan: a join with
+    a cached edge table as one side.  Its exchanges are those between the
+    join and the next join above it (the aggregate on the gather key and
+    the hand-off to the next consumer) plus those on either join side
+    down to that side's first join or aggregate."""
+    name, text, _, kids = node
+    found = []
+    if "Join" in name:
+        edge = [k for k in kids if _reads_edges(k)]
+        if edge:
+            exch = [t for t in up if "Exchange" in t]
+            exch += [x for k in kids for x in _exchanges_down(k)]
+            found.append((exch, _reads_edges(edge[0])))
+        up = ()
+    for k in kids:
+        found += _gathers(k, up + (text,))
+    return found
+
+
+def _loop_gathers(spark, monkeypatch, fn):
+    """``fn()`` and the gathers of every local checkpoint it takes, read
+    off AQE's initial physical plan of each (before its stages run)."""
+    DataFrame = type(spark.range(0))  # the concrete (classic) class
+    orig, gathers = DataFrame.localCheckpoint, []
+
+    def spy(self, *a, **k):
+        plan = self._jdf.queryExecution().executedPlan().initialPlan()
+        gathers.extend(_gathers(_tree(plan)))
+        return orig(self, *a, **k)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrame, "localCheckpoint", spy)
+        return fn(), gathers
+
+
 def test_rank_loop_marginal_cost_is_bounded(spark, monkeypatch):
     from sparkplug_spark.operators import (
         hits_integer,
@@ -114,16 +191,37 @@ def test_rank_loop_marginal_cost_is_bounded(spark, monkeypatch):
     e = _edges(spark)
     seeds = spark.range(0, 97, 7).select(F.col("id").alias("node"))
     we = e.withColumn("weight", F.col("src") % 3 + 1)
-    for op, args, j_cap, t_cap in (
-        (hits_integer, (e,), 18, 24),  # measured marginal: 15 jobs / 15 tasks
-        (pagerank_integer, (e,), 15, 24),  # measured marginal: 12 jobs / 12 tasks
-        (pagerank_personalized_integer, (e, seeds), 15, 24),  # 12 / 12
-        (pagerank_weighted_integer, (we,), 15, 24),  # 12 jobs / 12 tasks
+    for op, args, j_cap, t_cap, per_step in (
+        (hits_integer, (e,), 18, 24, 2),  # measured marginal: 15 / 15
+        (pagerank_integer, (e,), 15, 24, 1),  # measured marginal: 12 / 12
+        (pagerank_personalized_integer, (e, seeds), 15, 24, 1),  # 12 / 12
+        (pagerank_weighted_integer, (we,), 15, 24, 1),  # 12 jobs / 12 tasks
     ):
-        j3, t3 = _jobs_tasks(spark, lambda: op(*args, iterations=3))
+        gathers = []
+
+        def run3():
+            out, found = _loop_gathers(
+                spark, monkeypatch, lambda: op(*args, iterations=3)
+            )
+            gathers.extend(found)
+            return out
+
+        j3, t3 = _jobs_tasks(spark, run3)
         j6, t6 = _jobs_tasks(spark, lambda: op(*args, iterations=6))
         assert j6 - j3 <= j_cap, (op.__name__, j3, j6)
         assert t6 - t3 <= t_cap, (op.__name__, t3, t6)
+        # the shape behind the caps: every step gathers `per_step` times;
+        # each gather reads the edge table straight off its cache (no
+        # hash exchange on the edge side) and exchanges exactly twice:
+        # once to meet the edge layout (the node vector hashed on the
+        # join key, or at this size a broadcast of the smaller side) and
+        # once for the aggregate on the gather key
+        assert len(gathers) == 3 * per_step, (op.__name__, gathers)
+        for exch, edge_side in gathers:
+            assert len(exch) == 2, (op.__name__, exch)
+            assert not any(
+                "Exchange hashpartitioning" in t for t in edge_side
+            ), (op.__name__, edge_side)
     # the integer PageRank preflight is ONE aggregate action: every count
     # and headroom fact comes from the same node-sized aggregate
     acts = _driver_actions(

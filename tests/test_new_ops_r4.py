@@ -272,18 +272,19 @@ class TestPagerankCadenceAndTol:
         e = [(1, 2), (2, 1), (2, 3), (3, 2), (1, 3), (3, 1), (3, 4), (4, 3)]
         return spark.createDataFrame(e, "src long, dst long")
 
-    def test_cadence_invariance(self, spark):
-        from sparkplug_spark.operators.graphs import pagerank
+    def test_cadence_invariance(self, spark, monkeypatch):
+        from sparkplug_spark.operators import graphs
 
         e = self._edges(spark)
-        r1 = {
-            r.node: r.rank
-            for r in pagerank(e, iterations=6, checkpoint_every=1).collect()
-        }
-        r3 = {
-            r.node: r.rank
-            for r in pagerank(e, iterations=6, checkpoint_every=3).collect()
-        }
+
+        def run(every):
+            monkeypatch.setattr(graphs, "_RANK_CHECKPOINT_EVERY", every)
+            return {
+                r.node: r.rank
+                for r in graphs.pagerank(e, iterations=6).collect()
+            }
+
+        r1, r3 = run(1), run(3)
         assert set(r1) == set(r3)
         for n in r1:
             assert abs(r1[n] - r3[n]) < 1e-12
@@ -293,20 +294,20 @@ class TestPagerankCadenceAndTol:
 
         # node 3 has no out-edges: its mass redistributes each step
         e = spark.createDataFrame([(1, 2), (2, 3), (1, 3)], "src long, dst long")
-        ranks = pagerank(e, iterations=5, checkpoint_every=3).collect()
+        ranks = pagerank(e, iterations=5).collect()
         assert abs(sum(r.rank for r in ranks) - 1.0) < 1e-9
 
-    def test_tol_early_exit_matches_one_iteration(self, spark):
+    def test_tol_early_exit_matches_one_iteration(self, spark, monkeypatch):
+        from sparkplug_spark.operators import graphs
         from sparkplug_spark.operators.graphs import pagerank
 
         e = self._edges(spark)
         # huge tol: the first checkpoint's L1 is already below it, so the
-        # result must equal exactly checkpoint_every iterations
+        # result must equal exactly one checkpoint's worth of iterations
+        monkeypatch.setattr(graphs, "_RANK_CHECKPOINT_EVERY", 1)
         early = {
             r.node: r.rank
-            for r in pagerank(
-                e, iterations=8, tol=10.0, checkpoint_every=1
-            ).collect()
+            for r in pagerank(e, iterations=8, tol=10.0).collect()
         }
         one = {
             r.node: r.rank for r in pagerank(e, iterations=1).collect()

@@ -1,15 +1,24 @@
 """The shared integer PageRank core: the exact identities that let the
 plain, personalized and weighted tiers run one loop, and the
-block-release contract every integer rank tier keeps (only the returned
-blocks stay persisted)."""
+block-release contract every iterative graph and components operator
+keeps (only the blocks the returned DataFrame reads stay persisted)."""
 
 import pytest
 
 from sparkplug_spark.operators import (
+    bfs_distances,
+    bow_tie_report,
+    connected_components_star,
+    coreness,
+    hits,
     hits_integer,
+    label_propagation,
+    near_dup_groups,
+    pagerank,
     pagerank_integer,
     pagerank_personalized_integer,
     pagerank_weighted_integer,
+    strongly_connected_components,
 )
 
 DANGLING = [(1, 2), (2, 3), (3, 1), (1, 4), (5, 1), (2, 6)]  # 4, 6 dangle
@@ -46,30 +55,64 @@ def test_weighted_with_unit_weights_equals_plain(spark, graph):
     assert _ranks(pagerank_weighted_integer(w)) == plain
 
 
-@pytest.mark.parametrize(
-    "op",
-    [
-        hits_integer,
-        pagerank_integer,
-        pagerank_personalized_integer,
-        pagerank_weighted_integer,
-    ],
-    ids=lambda op: op.__name__,
-)
+#: the 9-edge directed graph of the loop-contract checks: one 3-cycle,
+#: one 2-cycle, dangling nodes, a source and a separate component
+LOOP_GRAPH = DANGLING + [(6, 7), (7, 6), (8, 9)]
+
+#: operator -> (call on the weighted edge table, blocks the result reads):
+#: one checkpoint each, except the lazy unions — one block per SCC peel
+#: round, one per non-empty BFS frontier
+BLOCK_CASES = {
+    "hits_integer": (lambda e, s: hits_integer(e, iterations=3), 1),
+    "pagerank_integer": (lambda e, s: pagerank_integer(e, iterations=3), 1),
+    "pagerank_personalized_integer": (
+        lambda e, s: pagerank_personalized_integer(e, s, iterations=3),
+        1,
+    ),
+    "pagerank_weighted_integer": (
+        lambda e, s: pagerank_weighted_integer(e, iterations=3),
+        1,
+    ),
+    "pagerank": (lambda e, s: pagerank(e, iterations=3), 1),
+    "hits": (lambda e, s: hits(e, iterations=3), 1),
+    "coreness": (lambda e, s: coreness(e), 1),
+    "label_propagation": (lambda e, s: label_propagation(e), 1),
+    "near_dup_groups": (lambda e, s: near_dup_groups(_pairs(e)), 1),
+    "connected_components_star": (
+        lambda e, s: connected_components_star(_pairs(e)),
+        1,
+    ),
+    "strongly_connected_components": (
+        lambda e, s: strongly_connected_components(e),
+        2,
+    ),
+    "bfs_distances": (lambda e, s: bfs_distances(e, s), 4),
+    "bow_tie_report": (lambda e, s: bow_tie_report(e), 1),
+    "bow_tie_report_detailed": (
+        lambda e, s: bow_tie_report(e, detailed=True),
+        1,
+    ),
+}
+
+
+def _pairs(e):
+    return e.selectExpr("src AS id_a", "dst AS id_b")
+
+
+@pytest.mark.parametrize("op", sorted(BLOCK_CASES))
 def test_only_the_returned_blocks_stay_persisted(spark, op):
+    call, n_blocks = BLOCK_CASES[op]
     e = spark.createDataFrame(
-        [(s, t, 2) for s, t in DANGLING], "src long, dst long, weight long"
+        [(s, t, 2) for s, t in LOOP_GRAPH], "src long, dst long, weight long"
     )
-    args = (e,)
-    if op is pagerank_personalized_integer:
-        args += (spark.createDataFrame([(1,), (5,)], "node long"),)
+    seeds = spark.createDataFrame([(1,), (5,)], "node long")
     registry = spark.sparkContext._jsc.getPersistentRDDs
 
     before = set(registry().keySet().toArray())
-    op(*args, iterations=3).collect()
+    call(e, seeds).collect()
     left = set(registry().keySet().toArray()) - before
     try:
-        assert len(left) == 1, (op.__name__, left)
+        assert len(left) == n_blocks, (op, left)
     finally:
         jmap = registry()
         for rid in left:

@@ -107,6 +107,30 @@ def test_literal_writes_match_lit_cast(spark, other_time_zones, ansi, escaped):
     assert got_ts == want_ts
 
 
+@pytest.mark.parametrize(
+    "value", ["1850-01-01T00:00:00", "1000-01-01T00:00:00"]
+)
+def test_pre_1900_timestamp_writes_match_create_dataframe(
+    spark, other_time_zones, value
+):
+    """Before the zones' last calendar switch, a timestamp literal stores
+    what ``createDataFrame`` stores for the same Python ``datetime``
+    (``F.lit``'s ``java.sql.Timestamp`` would apply the hybrid Julian
+    calendar and old offsets instead), and reads back as written."""
+    py = coerce_action_value(value, T.TimestampType())
+    rule = PlugRule("old", "v1", "true", (PlugAction("t", value),))
+    out = SparkPlug.builder(spark).create().plug(
+        spark.createDataFrame([(None,)], "t timestamp"), [rule]
+    )
+    want = spark.createDataFrame([(py,)], "t timestamp")
+
+    def micros(df):
+        return df.select(F.unix_micros("t")).first()[0]
+
+    assert micros(out) == micros(want)
+    assert out.first()["t"] == want.first()["t"] == py
+
+
 BROKEN = {
     "unbalanced condition": PlugRule(
         "unbalanced", "v1", "price = 1) OR (price = 2", (PlugAction("price", "5"),)

@@ -6,9 +6,12 @@ Usage:
     python tools/profile_query.py q1 [q2 ...] [--passes=2] [--plans=DIR]
 
 Prints one line per query:
-    <name>  best=<s>  passes=[..]  jobs=N stages=N tasks=N  plan=<path>
+    <name>  best=<s>  passes=[..]  jobs=N stages=N tasks=N  persisted=N  plan=<path>
 
-The job/stage/task counts are for the LAST pass (steady state).  Plans
+The job/stage/task counts are for the LAST pass (steady state).
+``persisted`` counts the persistent RDDs (caches and checkpoint blocks)
+still registered right after the last pass's write, read before the
+inter-pass hygiene frees them: the blocks a query leaves behind.  Plans
 land in --plans (default plans/r10) as <name>_profile.txt; pass
 --tag=before/after to write <name>_before.txt / <name>_after.txt for the
 judge-facing evidence files.
@@ -90,6 +93,9 @@ def main() -> None:
                         n_stages += 1
                         n_tasks += si.numTasks
             jobs0, stages0 = len(new_jobs), (n_stages, n_tasks)
+            # read before the plan capture (which calls the query again)
+            # and before the hygiene below
+            persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
             plan = None
             if p == passes - 1:
                 # capture the executed (AQE-final where applicable) plan
@@ -141,6 +147,7 @@ def main() -> None:
         print(
             f"{name}  best={min(times):.3f}  passes={times}  "
             f"jobs={jobs0} stages={stages0[0]} tasks={stages0[1]}  "
+            f"persisted={persisted}  "
             f"plan={plan_path if isinstance(plan, str) else 'FAILED'}",
             flush=True,
         )
