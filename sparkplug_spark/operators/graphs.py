@@ -5,22 +5,40 @@ bow-tie report), structure (strongly connected components, k-core
 coreness, triangle counts) and communities (label propagation).  The
 undirected connected-components tiers live in ``groups.py``.
 
-Scale plan shared by the family: the edge list is canonicalized once
-(:func:`_canonical_edges`), persisted or checkpointed hash-partitioned on
-each gather key, so an iteration re-exchanges only node-sized vectors
-against a STABLE edge layout; loop shuffles run at an edge-count-derived
-partition count (:func:`~..partitioning.loop_partitions`, a no-op at
-production scale).  Every iterative loop except the BFS frontier, the
-SCC outer peel and :func:`hits_integer` runs through
-:func:`~..caching.fixpoint`: chained lazy steps, one checkpoint per
-round with its scalar feed (dangling mass, norms, change counts) riding
-that action as ``observe`` metrics, and round N-1's blocks freed once
-round N has landed — without which 20 iterations of lazy lineage would
-both blow up the plan and leak 20 generations of blocks.
+Scale plan shared by the family: every directed operator builds ONE
+:class:`_EdgeTable` per call.  It canonicalizes the edge list once
+(endpoints projected to (src, dst), null endpoints dropped, duplicate
+pairs collapsed, or summed into a positive BIGINT ``w`` for the
+weighted tier) and counts it without a ``count()`` job: the count rides
+the table's first materialization as an ``observe`` metric, or comes
+from the preflight aggregate the operator runs anyway.  It hands out
+the table hash-partitioned on each gather key (by src, by dst, reversed
+by src), each layout persisted once on first use, so an iteration
+re-exchanges only node-sized vectors against a STABLE edge layout, and
+it owns the loop's shuffle scope: an edge-count-derived partition
+count (:func:`~..partitioning.loop_partitions`), since a cached layout
+pins every join that reads it and AQE alone cannot coalesce them; a
+no-op at production scale.  It frees exactly the blocks and caches it created: a plan the
+caller has already cached is read as it is and never released.
+:func:`label_propagation` builds its table over the symmetrized edge
+list, the one undirected user.  Out of scope: :func:`coreness` and
+:func:`triangle_counts` keep their own ``min < max`` undirected
+canonicalization, and :func:`hits_incremental` builds a table per phase
+(sharing one across the cold and warm calls would need a public
+handle).
+
+Every iterative loop except the BFS frontier, the SCC outer peel and
+:func:`hits_integer` runs through :func:`~..caching.fixpoint`: chained
+lazy steps, one checkpoint per round with its scalar feed (dangling
+mass, norms, change counts) riding that action as ``observe`` metrics,
+and round N-1's blocks freed once round N has landed — without which 20
+iterations of lazy lineage would both blow up the plan and leak 20
+generations of blocks.
 """
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
@@ -93,6 +111,125 @@ __all__ = [
 ]
 
 
+def _canonical_edges(
+    edges: DataFrame, src_col: str, dst_col: str, weight_col: str | None = None
+) -> DataFrame:
+    """(src, dst) projection of ``edges`` with null endpoints dropped and
+    duplicate pairs collapsed: the canonical form of :class:`_EdgeTable`
+    and of the :func:`fold_edges` store.  With ``weight_col``, a BIGINT
+    ``w`` column too: non-positive weights are dropped and duplicate
+    pairs sum theirs."""
+    cols = [F.col(src_col).alias("src"), F.col(dst_col).alias("dst")]
+    if weight_col is not None:
+        cols.append(F.col(weight_col).cast("long").alias("w"))
+    e = edges.select(*cols).where(
+        F.col("src").isNotNull() & F.col("dst").isNotNull()
+    )
+    if weight_col is None:
+        return e.dropDuplicates(["src", "dst"])
+    return (
+        e.where(F.col("w") > 0).groupBy("src", "dst").agg(F.sum("w").alias("w"))
+    )
+
+
+class _EdgeTable:
+    """The canonical edge table of one directed-operator call, and the
+    owner of what that call caches.
+
+    Built once from ``(edges, src_col, dst_col)`` through
+    :func:`_canonical_edges` (``weight_col`` adds the summed ``w``), or
+    taken as it is from a caller's canonical store
+    (``assume_canonical=True``).  ``count=True`` checkpoints the table at
+    once, the edge count :attr:`n` riding that action as an ``observe``
+    metric; otherwise the table is persisted lazily and the operator sets
+    :attr:`n` from the aggregate it runs anyway.  :meth:`scope` is the
+    loop's shuffle scope; :meth:`layout` is the table hash-partitioned on
+    a gather key, persisted on first use inside that scope (a checkpoint
+    would be one more eager job per layout, and a persisted layout's
+    partitioning is read straight off its cache by every gather join).
+
+    :meth:`persist` skips a plan that is already cached, so a caller's
+    cache is read but never owned; :meth:`release` (or leaving a
+    ``with`` block) frees exactly what the table persisted or
+    checkpointed."""
+
+    def __init__(
+        self,
+        edges: DataFrame,
+        src_col: str = "src",
+        dst_col: str = "dst",
+        *,
+        assume_canonical: bool = False,
+        weight_col: str | None = None,
+        count: bool = False,
+    ):
+        self.spark = edges.sparkSession
+        self._cached: list[DataFrame] = []
+        self._ids: set[int] = set()
+        self._layouts: dict[str, DataFrame] = {}
+        self.n: int | None = None
+        if assume_canonical:
+            e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        else:
+            e = _canonical_edges(edges, src_col, dst_col, weight_col)
+        if count:
+            obs = Observation()
+            e, self._ids = checkpoint_tracked(
+                e.observe(obs, F.count(F.lit(1)).alias("n"))
+            )
+            self.n = int(obs.get["n"])
+        self.edges = e if count else self.persist(e)
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        """``df`` persisted and owned, unless its plan is already cached."""
+        if df.storageLevel == StorageLevel.NONE:
+            df = df.persist()
+            self._cached.append(df)
+        return df
+
+    def scope(self):
+        return shuffle_scope(self.spark, loop_partitions(self.spark, self.n))
+
+    def layout(self, key: str) -> DataFrame:
+        """The table hash-partitioned on ``key``: ``"src"``, ``"dst"``, or
+        ``"rev"`` (reversed, so an in-edge gather reads it on src)."""
+        if key not in self._layouts:
+            e, on = self.edges, key
+            if key == "rev":
+                e, on = e.select(
+                    F.col("dst").alias("src"), F.col("src").alias("dst")
+                ), "src"
+            self._layouts[key] = self.persist(e.repartition(on))
+        return self._layouts[key]
+
+    def nodes(self) -> DataFrame:
+        """The distinct endpoints, as (node)."""
+        e = self.edges
+        return (
+            e.select(F.col("src").alias("node"))
+            .unionByName(e.select(F.col("dst").alias("node")))
+            .distinct()
+        )
+
+    def empty(self, ddl: str) -> DataFrame:
+        """An empty result of schema ``ddl``, with ``{node}`` standing for
+        the endpoint type; no block backs it."""
+        node = self.edges.schema["src"].dataType.simpleString()
+        return self.spark.createDataFrame([], ddl.format(node=node))
+
+    def release(self) -> None:
+        for df in self._cached:
+            df.unpersist()
+        unpersist_ids(self.spark, self._ids)
+        self._cached, self._ids, self._layouts = [], set(), {}
+
+    def __enter__(self) -> _EdgeTable:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.release()
+
+
 def pagerank(
     edges: DataFrame,
     src_col: str = "src",
@@ -146,31 +283,20 @@ def pagerank(
         raise ValueError("iterations must be >= 1")
     if tol is not None and tol <= 0.0:
         raise ValueError("tol must be positive")
-    spark = edges.sparkSession
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct().persist()
-    n_edges = e.count()
-    with shuffle_scope(spark, loop_partitions(spark, n_edges)):
-        nodes = (
-            e.select(F.col("src").alias("node"))
-            .unionByName(e.select(F.col("dst").alias("node")))
-            .distinct()
-        )
+    with _EdgeTable(edges, src_col, dst_col, count=True) as t, t.scope():
+        if t.n == 0:
+            return t.empty("node {node}, rank double")
+        e, nodes = t.edges, t.nodes()
         deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("__deg"))
         # weight each edge once; partition by src so every iteration's
-        # rank join lands on a stable edge partitioning (at an
-        # edge-count-derived partition count — cached/checkpointed
-        # layouts pin the loop's joins, so AQE alone cannot coalesce
-        # them; no-op at production scale)
-        weighted = (
+        # rank join lands on a stable edge partitioning
+        weighted = t.persist(
             e.join(deg, "src")
             .select(
                 "src", "dst", (F.lit(1.0) / F.col("__deg")).alias("__w")
             )
             .repartition("src")
         )
-        weighted, w_ids = checkpoint_tracked(weighted)
         n_df = nodes.select(F.count(F.lit(1)).cast("long").alias("__n"))
         # static dangling flag: a node with no out-edges keeps its mass,
         # which next iteration redistributes uniformly.  Flagging nodes
@@ -193,15 +319,6 @@ def pagerank(
         dm = F.sum(F.when(F.col("__dang"), F.col("rank"))).alias("dm")
         obs0 = Observation()
         ranks, base_ids = checkpoint_tracked(base.observe(obs0, dm))
-        if ranks.isEmpty():
-            # no nodes: the loop's observations would never fire (zero
-            # tasks can mean no metrics), so return the empty result
-            # directly.  base_ids stays persisted — those blocks back the
-            # RETURNED DataFrame (a local checkpoint cannot be recomputed
-            # once freed)
-            unpersist_ids(spark, w_ids)
-            e.unpersist()
-            return ranks.select("node", "rank")
         m0 = obs0.get
         d = float(damping)
 
@@ -247,8 +364,6 @@ def pagerank(
             ids=base_ids,
             metrics=m0,
         )
-        unpersist_ids(spark, w_ids)
-        e.unpersist()
         return ranks.select("node", "rank")
 
 
@@ -271,81 +386,59 @@ def bfs_distances(
     reproduces it bit-for-bit).
 
     Plan: classic frontier iteration — join the (shrinking) frontier to
-    the src-partitioned checkpointed edge list, anti-join out nodes
-    already visited, checkpoint the new frontier.  Each round shuffles
+    the edge table's src layout, anti-join out nodes already visited,
+    checkpoint the new frontier.  Each round shuffles
     only frontier-sized data.  ONE action per hop: the new frontier's
     checkpoint, with its row count riding the materialization as an
     ``observe`` metric (the early-exit probe); the visited set is the
     lazy union of the per-hop frontier checkpoints — re-materializing it
     per hop bought nothing (the anti-join reads the ≤max_hops pieces
     directly), and those pieces back the returned DataFrame, so unlike
-    the other loops this one frees no round.  Loop shuffles run at an
-    edge-count-derived partition count (no-op at production scale)."""
+    the other loops this one frees no round."""
     if max_hops < 0:
         raise ValueError("max_hops must be >= 0")
-    spark = edges.sparkSession
-    e0 = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct().persist()
-    n_edges = e0.count()
-    with shuffle_scope(spark, loop_partitions(spark, n_edges)):
-        e, e_ids = checkpoint_tracked(e0.repartition("src"))
-    e0.unpersist()
-    out, _ = _bfs(
-        e, n_edges, sources.select(F.col(node_col).alias("node")), max_hops
-    )
-    unpersist_ids(spark, e_ids)
-    return out
+    with _EdgeTable(edges, src_col, dst_col, count=True) as t:
+        sources = sources.select(F.col(node_col).alias("node"))
+        return _bfs(t, "src", sources, max_hops)[0]
 
 
 def _bfs(
-    e: DataFrame, n_edges: int, sources: DataFrame, max_hops: int
+    t: _EdgeTable, key: str, sources: DataFrame, max_hops: int
 ) -> tuple[DataFrame, set[int]]:
-    """The frontier loop of :func:`bfs_distances` over a distinct,
-    src-partitioned edge table ``e`` of ``n_edges`` rows (the caller owns
-    its blocks) from ``sources`` (node); returns (node, distance) and the
-    ids of the frontier blocks backing it, which the caller frees once
-    it has materialized what it built on them."""
-    spark = e.sparkSession
-    with shuffle_scope(spark, loop_partitions(spark, n_edges)):
-        obs = Observation()
-        frontier, ids = checkpoint_tracked(
-            sources.distinct().observe(obs, F.count(F.lit(1)).alias("n"))
-        )
-        n_frontier = int(obs.get["n"] or 0)
+    """The frontier loop of :func:`bfs_distances` over the ``key`` layout
+    of ``t`` (``"src"`` walks forward, ``"rev"`` backward) from
+    ``sources`` (node); returns (node, distance) and the ids of the
+    frontier blocks backing it, which the caller frees once it has
+    materialized what it built on them."""
+    with t.scope():
+        e = t.layout(key)
         # the visited set is the union of the per-hop frontier pieces;
         # every piece's checkpoint blocks back the returned DataFrame and
         # stay persisted (a local checkpoint is the blocks' only copy)
-        pieces = [frontier.withColumn("distance", F.lit(0).cast("long"))]
-        visited_nodes = frontier.select("node")
-        for hop in range(1, max_hops + 1):
-            if n_frontier == 0:
-                break
-            nxt = (
-                e.join(frontier.withColumnRenamed("node", "src"), "src")
-                .select(F.col("dst").alias("node"))
-                .distinct()
-                .join(visited_nodes, "node", "left_anti")
-            )
+        visited, ids, frontier = None, set(), sources.distinct()
+        for hop in range(max_hops + 1):
+            if hop:
+                frontier = (
+                    e.join(frontier.withColumnRenamed("node", "src"), "src")
+                    .select(F.col("dst").alias("node"))
+                    .distinct()
+                    .join(visited.select("node"), "node", "left_anti")
+                )
             obs = Observation()
             frontier, f_ids = checkpoint_tracked(
-                nxt.observe(obs, F.count(F.lit(1)).alias("n"))
+                frontier.observe(obs, F.count(F.lit(1)).alias("n"))
             )
-            n_frontier = int(obs.get["n"] or 0)
-            if n_frontier == 0:
+            if not obs.get["n"]:
                 # an empty frontier backs nothing
-                unpersist_ids(spark, f_ids)
+                unpersist_ids(t.spark, f_ids)
                 break
             ids |= f_ids
-            pieces.append(
-                frontier.withColumn("distance", F.lit(hop).cast("long"))
+            piece = frontier.withColumn("distance", F.lit(hop).cast("long"))
+            visited = piece if visited is None else visited.unionByName(piece)
+        if visited is None:
+            visited = t.spark.createDataFrame([], sources.schema).withColumn(
+                "distance", F.lit(0).cast("long")
             )
-            visited_nodes = visited_nodes.unionByName(
-                frontier.select("node")
-            )
-        visited = pieces[0]
-        for p in pieces[1:]:
-            visited = visited.unionByName(p)
         return visited, ids
 
 
@@ -503,6 +596,12 @@ def coreness(
         .persist()
     )
     n_edges = e.count()
+    if n_edges == 0:
+        e.unpersist()
+        item = e.schema["a"].dataType.simpleString()
+        return spark.createDataFrame(
+            [], f"item {item}, degree bigint, core bigint"
+        )
     with shuffle_scope(spark, loop_partitions(spark, 2 * n_edges)):
         # symmetric adjacency partitioned on u — the key every round's
         # neighbor join uses (unpartitioned, the full adjacency
@@ -591,35 +690,19 @@ def hits(
     — rows-only territory; tests pin small graphs to a dense NumPy twin
     at 1e-9.
 
-    Plan per iteration: two partition-aligned shuffles (edges are kept
-    as TWO checkpointed copies, partitioned by src for the authority
-    gather and by dst for the hub gather); the per-iteration authority
-    table is persisted for its two consumers and released once the
-    checkpoint that read it has landed; lineage stays bounded by the
-    cadence."""
+    Plan per iteration: two partition-aligned shuffles (the edge table's
+    src layout for the authority gather, its dst layout for the hub
+    gather); the per-iteration authority table is persisted for its two
+    consumers and released once the checkpoint that read it has landed;
+    lineage stays bounded by the cadence."""
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    spark = edges.sparkSession
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct().persist()
-    n_edges = e.count()
-    if n_edges == 0:
-        e.unpersist()
-        return spark.createDataFrame(
-            [], "node long, hub double, authority double"
-        )
-    with shuffle_scope(spark, loop_partitions(spark, n_edges)):
-        e_src, src_ids = checkpoint_tracked(e.repartition("src"))
-        e_dst, dst_ids = checkpoint_tracked(e_src.repartition("dst"))
-        e.unpersist()
-        state = (
-            e_src.select(F.col("src").alias("node"))
-            .unionByName(e_src.select(F.col("dst").alias("node")))
-            .distinct()
-            .select(
-                "node", F.lit(1.0).alias("auth"), F.lit(1.0).alias("hub")
-            )
+    with _EdgeTable(edges, src_col, dst_col, count=True) as t, t.scope():
+        if t.n == 0:
+            return t.empty("node {node}, hub double, authority double")
+        e_src, e_dst = t.layout("src"), t.layout("dst")
+        state = t.nodes().select(
+            "node", F.lit(1.0).alias("auth"), F.lit(1.0).alias("hub")
         )
         pending: list[DataFrame] = []
 
@@ -672,38 +755,13 @@ def hits(
         )
         for c in pending:
             c.unpersist()
-        unpersist_ids(spark, src_ids)
-        unpersist_ids(spark, dst_ids)
         return scaled(state, m).select(
             "node", "hub", F.col("auth").alias("authority")
         )
 
 
-def _canonical_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
-    """(src, dst) projection of ``edges`` with null endpoints dropped and
-    duplicate pairs collapsed: the canonical edge table the integer rank
-    tiers, :func:`hits_integer` and the :func:`fold_edges` store share."""
-    return (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .dropDuplicates(["src", "dst"])
-    )
-
-
-def _both_directions(e: DataFrame) -> tuple[DataFrame, DataFrame, set[int]]:
-    """Checkpoints of the (src, dst) table ``e`` forward and reversed,
-    both hash-partitioned on the gather key ``src``, and their block
-    ids."""
-    fwd, f_ids = checkpoint_tracked(e.repartition("src"))
-    rev, r_ids = checkpoint_tracked(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        .repartition("src")
-    )
-    return fwd, rev, f_ids | r_ids
-
-
 def _rank_nano(
-    e: DataFrame,
+    t: _EdgeTable,
     iterations: int,
     damping_pct: int,
     unit: int,
@@ -714,7 +772,7 @@ def _rank_nano(
     :func:`pagerank_personalized_integer` and
     :func:`pagerank_weighted_integer`.
 
-    ``e`` is a canonical (src, dst) table with an optional column ``w``
+    ``t`` is a lazily persisted edge table with an optional column ``w``
     of positive BIGINT weights (absent: every weight is 1);
     ``seeds`` (node) receives the teleport and dangling mass, and
     ``None`` makes every node a seed.  Two exact integer identities let
@@ -745,12 +803,9 @@ def _rank_nano(
     if not (0 < damping_pct < 100):
         raise ValueError("damping_pct must be in (0, 100)")
     d, unit = int(damping_pct), int(unit)
-    spark = e.sparkSession
-    # no weight column = every weight 1: the edge table keeps the caller's
-    # plan, so a caller-cached canonical store is reused, not copied (and
-    # is released with the working set on exit)
+    # no weight column = every weight 1
+    e = t.edges
     w = F.col("w") if "w" in e.columns else F.lit(1).cast("long")
-    e = e.persist()
     ends = e.select(F.col("src").alias("node")).unionByName(
         e.select(F.col("dst").alias("node"))
     ).select("node", F.lit(seeds is None).alias("__s"))
@@ -772,115 +827,107 @@ def _rank_nano(
             "node",
             "left",
         )
-    marked0 = marked0.withColumn("__dang", F.col("outw").isNull()).persist()
-    cached = [e, marked0]
-    try:
-        dang, is_seed = F.col("__dang"), F.col("__s")
-        st = marked0.agg(
-            F.count(F.lit(1)).alias("nn"),
-            F.count(F.when(is_seed, 1)).alias("ns"),
-            F.count(F.when(dang, 1)).alias("nd"),
-            F.sum("__od").alias("ne"),
-            F.max("__mw").alias("mw"),
-            # warm start: the initial dangling mass is the init vector's
-            # sum over the dangling set plus the default share of every
-            # dangling seed it does not cover
-            F.sum(F.when(dang, F.col("__init"))).alias("di"),
-            F.count(F.when(dang & is_seed & F.col("__init").isNull(), 1))
-            .alias("dn"),
-        ).first()
-        n_nodes, n_seeds = int(st["nn"]), int(st["ns"])
-        if seeds is not None and n_seeds == 0:
-            raise ValueError("seeds must be non-empty")
-        # int64 headroom: total mass is conserved at ~n_nodes*unit (floor
-        # losses only shrink it), and a near-sink node can receive almost
-        # all of it, so `damping_pct * (inc + ds)` peaks near
-        # damping_pct * n_nodes * unit, and `rank * w` at unit * n_nodes *
-        # max_weight.  Spark's non-ANSI multiply WRAPS silently on
-        # overflow, so fail loudly instead of diverging.
-        max_w = int(st["mw"] or 1)
-        if d * n_nodes * unit * max_w >= 2**63:
-            raise ValueError(
-                f"int64 headroom exceeded: damping_pct*n_nodes*unit*"
-                f"max_weight = {d}*{n_nodes}*{unit}*{max_w} >= 2^63; pass "
-                f"a smaller unit (<= {2**63 // (d * n_nodes * max_w) - 1})"
+    marked0 = t.persist(marked0.withColumn("__dang", F.col("outw").isNull()))
+    dang, is_seed = F.col("__dang"), F.col("__s")
+    st = marked0.agg(
+        F.count(F.lit(1)).alias("nn"),
+        F.count(F.when(is_seed, 1)).alias("ns"),
+        F.count(F.when(dang, 1)).alias("nd"),
+        F.sum("__od").alias("ne"),
+        F.max("__mw").alias("mw"),
+        # warm start: the initial dangling mass is the init vector's
+        # sum over the dangling set plus the default share of every
+        # dangling seed it does not cover
+        F.sum(F.when(dang, F.col("__init"))).alias("di"),
+        F.count(F.when(dang & is_seed & F.col("__init").isNull(), 1))
+        .alias("dn"),
+    ).first()
+    n_nodes, n_seeds = int(st["nn"]), int(st["ns"])
+    if seeds is not None and n_seeds == 0:
+        raise ValueError("seeds must be non-empty")
+    if n_nodes == 0:
+        return t.empty("node {node}, rank_nano bigint")
+    # int64 headroom: total mass is conserved at ~n_nodes*unit (floor
+    # losses only shrink it), and a near-sink node can receive almost
+    # all of it, so `damping_pct * (inc + ds)` peaks near
+    # damping_pct * n_nodes * unit, and `rank * w` at unit * n_nodes *
+    # max_weight.  Spark's non-ANSI multiply WRAPS silently on
+    # overflow, so fail loudly instead of diverging.
+    max_w = int(st["mw"] or 1)
+    if d * n_nodes * unit * max_w >= 2**63:
+        raise ValueError(
+            f"int64 headroom exceeded: damping_pct*n_nodes*unit*"
+            f"max_weight = {d}*{n_nodes}*{unit}*{max_w} >= 2^63; pass "
+            f"a smaller unit (<= {2**63 // (d * n_nodes * max_w) - 1})"
+        )
+    # teleport total = (100-d)% of n*unit, split over the seeds; the
+    # full n*unit starts on the seeds (uncovered ones, when warm)
+    seed_base = ((100 - d) * n_nodes * unit // 100) // n_seeds
+    init_share = n_nodes * unit // n_seeds
+    dm = int(st["di"] or 0) + int(st["dn"]) * init_share
+    t.n = int(st["ne"] or 0)
+    with t.scope():
+        # Σw_out folded INTO the edge table once, hash-partitioned on
+        # src: each iteration then costs exactly TWO exchanges (the
+        # node-sized rank table to hash(src) and the dst aggregation);
+        # joined to `outw`, not `marked0`, whose deeper lineage every
+        # iteration re-plans against (measured ~20% slower loop)
+        we = t.persist(
+            e.select("src", "dst", w.alias("w"))
+            .join(outw.select(F.col("node").alias("src"), "outw"), "src")
+            .repartition("src")
+        )
+        marked = t.persist(
+            marked0.select("node", "__s", "__dang", "__init").repartition(
+                "node"
             )
-        ns = max(n_seeds, 1)  # 0 only for an empty plain graph
-        # teleport total = (100-d)% of n*unit, split over the seeds; the
-        # full n*unit starts on the seeds (uncovered ones, when warm)
-        seed_base = ((100 - d) * n_nodes * unit // 100) // ns
-        init_share = n_nodes * unit // ns
-        dm = int(st["di"] or 0) + int(st["dn"]) * init_share
-        with shuffle_scope(spark, loop_partitions(spark, int(st["ne"] or 0))):
-            # Σw_out folded INTO the edge table once, hash-partitioned on
-            # src: each iteration then costs exactly TWO exchanges (the
-            # node-sized rank table to hash(src) and the dst aggregation)
-            # at an edge-count-derived partition count (cached layouts pin
-            # every join, so AQE cannot coalesce these; no-op at production
-            # scale); joined to `outw`, not `marked0`, whose deeper lineage
-            # every iteration re-plans against (measured ~20% slower loop)
-            we = (
-                e.select("src", "dst", w.alias("w"))
-                .join(outw.select(F.col("node").alias("src"), "outw"), "src")
-                .repartition("src")
-                .persist()
+        )
+        m = marked.select(
+            "node",
+            "__dang",
+            F.coalesce(
+                "__init", F.when(is_seed, F.lit(init_share)).otherwise(0)
             )
-            marked = (
-                marked0.select("node", "__s", "__dang", "__init")
-                .repartition("node")
-                .persist()
+            .cast("long")
+            .alias("rank_nano"),
+        )
+
+        def step(m: DataFrame, got: dict | None) -> DataFrame:
+            # ranks >= 0: // == div; a chained step (got is None) runs
+            # only when nothing dangles
+            ds = (int(got["dm"] or 0) if got else 0) // n_seeds
+            incoming = (
+                we.join(
+                    m.select(F.col("node").alias("src"), "rank_nano"), "src"
+                )
+                .groupBy(F.col("dst").alias("node"))
+                .agg(
+                    F.sum(F.expr("rank_nano * w div outw"))
+                    .cast("long")
+                    .alias("inc")
+                )
             )
-            cached += [we, marked]
-            m = marked.select(
+            return marked.join(incoming, "node", "left").select(
                 "node",
                 "__dang",
-                F.coalesce(
-                    "__init", F.when(is_seed, F.lit(init_share)).otherwise(0)
-                )
-                .cast("long")
-                .alias("rank_nano"),
+                (
+                    F.when(is_seed, F.lit(seed_base)).otherwise(0).cast("long")
+                    + F.expr(
+                        f"{d}L * (coalesce(inc, 0L)"
+                        f" + CASE WHEN __s THEN {ds}L ELSE 0L END) div 100"
+                    )
+                ).cast("long").alias("rank_nano"),
             )
 
-            def step(m: DataFrame, got: dict | None) -> DataFrame:
-                # ranks >= 0: // == div; a chained step (got is None)
-                # runs only when nothing dangles
-                ds = (int(got["dm"] or 0) if got else 0) // ns
-                incoming = (
-                    we.join(
-                        m.select(F.col("node").alias("src"), "rank_nano"),
-                        "src",
-                    )
-                    .groupBy(F.col("dst").alias("node"))
-                    .agg(
-                        F.sum(F.expr("rank_nano * w div outw"))
-                        .cast("long")
-                        .alias("inc")
-                    )
-                )
-                return marked.join(incoming, "node", "left").select(
-                    "node",
-                    "__dang",
-                    (
-                        F.when(is_seed, F.lit(seed_base)).otherwise(0).cast("long")
-                        + F.expr(
-                            f"{d}L * (coalesce(inc, 0L)"
-                            f" + CASE WHEN __s THEN {ds}L ELSE 0L END) div 100"
-                        )
-                    ).cast("long").alias("rank_nano"),
-                )
-
-            m, _, _, _ = fixpoint(
-                m,
-                step,
-                int(iterations),
-                chain=_RANK_CHECKPOINT_EVERY if not int(st["nd"]) else 1,
-                observe=[F.sum(F.when(dang, F.col("rank_nano"))).alias("dm")],
-                metrics={"dm": dm},
-            )
-            return m.select("node", "rank_nano")
-    finally:
-        for df_ in cached:
-            df_.unpersist()
+        m, _, _, _ = fixpoint(
+            m,
+            step,
+            int(iterations),
+            chain=_RANK_CHECKPOINT_EVERY if not int(st["nd"]) else 1,
+            observe=[F.sum(F.when(dang, F.col("rank_nano"))).alias("dm")],
+            metrics={"dm": dm},
+        )
+        return m.select("node", "rank_nano")
 
 
 def pagerank_integer(
@@ -922,18 +969,12 @@ def pagerank_integer(
     skips the null-filter + dropDuplicates pre-pass when the caller
     KNOWS the edge table is already canonical (true by construction for
     a maintained edge store) — at corpus scale that pre-pass is a full
-    edge shuffle per batch."""
-    if assume_canonical:
-        e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    else:
-        e = _canonical_edges(edges, src_col, dst_col)
-    return _rank_nano(
-        e,
-        iterations,
-        damping_pct,
-        unit,
-        init_ranks=init_ranks,
-    )
+    edge shuffle per batch.  A store the caller has cached is read from
+    that cache and stays cached."""
+    with _EdgeTable(
+        edges, src_col, dst_col, assume_canonical=assume_canonical
+    ) as t:
+        return _rank_nano(t, iterations, damping_pct, unit, init_ranks=init_ranks)
 
 
 def fold_edges(
@@ -1076,51 +1117,33 @@ def strongly_connected_components(
     fold makes observing only the LAST sub-step's change count sound
     (zero changes in the last sub-step means F(x)=x, a fixpoint
     certificate; any extra chained sub-step recomputes identical labels);
-    the remaining edge set is checkpointed per round in BOTH directions,
-    hash-partitioned on the gather key, so inner steps re-exchange only
-    node-sized labels; the per-round (assigned, new remainder) pair is
-    ONE checkpoint of the f=b comparison with the remainder count riding
-    it as an observe metric (three actions per round become one); loop
-    shuffles run at an edge-count-derived partition count
-    (:func:`~..partitioning.loop_partitions`, no-op at scale)."""
-    return _scc(edges, src_col, dst_col, max_rounds, max_inner)[0]
+    the remaining edge set is checkpointed once per round, and its
+    forward and reversed layouts, hash-partitioned on the gather key, let
+    inner steps re-exchange only node-sized labels; the per-round
+    (assigned, new remainder) pair is ONE checkpoint of the f=b
+    comparison with the remainder count riding it as an observe metric
+    (three actions per round become one)."""
+    if max_rounds < 1 or max_inner < 1:
+        raise ValueError("max_rounds and max_inner must be >= 1")
+    with _EdgeTable(edges, src_col, dst_col, count=True) as t:
+        return _scc(t, max_rounds, max_inner)[0]
 
 
 def _scc(
-    edges: DataFrame,
-    src_col: str,
-    dst_col: str,
-    max_rounds: int,
-    max_inner: int = 64,
+    t: _EdgeTable, max_rounds: int, max_inner: int = 64
 ) -> tuple[DataFrame, set[int]]:
-    """:func:`strongly_connected_components` plus the ids of the per-round
-    checkpoint blocks its lazy union reads, for a caller that frees them
-    once it has materialized what it built on the components."""
-    if max_rounds < 1 or max_inner < 1:
-        raise ValueError("max_rounds and max_inner must be >= 1")
-    spark = edges.sparkSession
-    # both counts ride their checkpoints as observe metrics
-    n = F.count(F.lit(1)).alias("n")
-    obs = Observation()
-    e0, e0_ids = checkpoint_tracked(
-        _canonical_edges(edges, src_col, dst_col).observe(obs, n)
-    )
-    n_edges = int(obs.get["n"])
-    with shuffle_scope(spark, loop_partitions(spark, n_edges)):
-        rem = (
-            e0.select(F.col("src").alias("node"))
-            .unionByName(e0.select(F.col("dst").alias("node")))
-            .distinct()
-        )
-        obs = Observation()
-        rem, rem_ids = checkpoint_tracked(rem.observe(obs, n))
-        n_rem = int(obs.get["n"])
-        # both gather directions, hash-partitioned on the gather key, so
-        # each inner step re-exchanges only labels
-        sube_fwd, sube_rev, sub_ids = _both_directions(e0)
-        unpersist_ids(spark, e0_ids)
-        done_parts: list[DataFrame] = []
-        done_ids: set[int] = set()
+    """:func:`strongly_connected_components` over the counted edge table
+    ``t`` plus the ids of the per-round checkpoint blocks its lazy union
+    reads, for a caller that frees them once it has materialized what it
+    built on the components.  ``t``'s layouts stay for the caller."""
+    if t.n == 0:
+        return t.empty("node {node}, scc_id {node}"), set()
+    spark = t.spark
+    with t.scope():
+        rem, rem_ids = checkpoint_tracked(t.nodes())
+        # the remaining subgraph; its gather layouts (by src, reversed by
+        # src) let each inner step re-exchange only labels
+        sub, out, done_ids = t, None, set()
 
         def _min_fixpoint(edges_dir: DataFrame, nodes: DataFrame) -> tuple:
             """labels (node, lab) after propagating min over in-edges of
@@ -1170,54 +1193,54 @@ def _scc(
                 )
             return lab, live
 
-        for _ in range(int(max_rounds)):
-            if n_rem == 0:
-                break
-            f_lab, f_ids = _min_fixpoint(sube_fwd, rem)
-            b_lab, b_ids = _min_fixpoint(sube_rev, rem)
-            # ONE checkpoint holds both the round's assignments and the
-            # remainder; the remainder count rides it as an observation
-            obs = Observation()
-            both = (
-                f_lab.join(b_lab.withColumnRenamed("lab", "__b"), "node")
-                .observe(
+        try:
+            for _ in range(int(max_rounds)):
+                f_lab, f_ids = _min_fixpoint(sub.layout("src"), rem)
+                b_lab, b_ids = _min_fixpoint(sub.layout("rev"), rem)
+                # ONE checkpoint holds both the round's assignments and the
+                # remainder; the remainder count rides it as an observation
+                obs = Observation()
+                both = f_lab.join(
+                    b_lab.withColumnRenamed("lab", "__b"), "node"
+                ).observe(
                     obs,
                     F.sum(
                         F.when(F.col("lab") != F.col("__b"), 1).otherwise(0)
                     ).alias("n_rem"),
                 )
-            )
-            both, both_ids = checkpoint_tracked(both)
-            n_rem = int(obs.get["n_rem"] or 0)
-            assigned = both.where(F.col("lab") == F.col("__b")).select(
-                "node", F.col("lab").alias("scc_id")
-            )
-            done_parts.append(assigned)
-            done_ids |= both_ids
-            new_rem = both.where(F.col("lab") != F.col("__b")).select(
-                "node"
-            )
-            unpersist_ids(spark, f_ids | b_ids | rem_ids)
-            rem, rem_ids = new_rem, set()
-            if n_rem == 0:
-                break
-            nxt = _both_directions(
-                sube_fwd.join(
-                    new_rem.withColumnRenamed("node", "src"), "src", "semi"
-                ).join(new_rem.withColumnRenamed("node", "dst"), "dst", "semi")
-            )
-            unpersist_ids(spark, sub_ids)
-            sube_fwd, sube_rev, sub_ids = nxt
-        else:
-            if n_rem != 0:
+                both, both_ids = checkpoint_tracked(both)
+                n_rem = int(obs.get["n_rem"] or 0)
+                assigned = both.where(F.col("lab") == F.col("__b")).select(
+                    "node", F.col("lab").alias("scc_id")
+                )
+                out = assigned if out is None else out.unionByName(assigned)
+                done_ids |= both_ids
+                new_rem = both.where(F.col("lab") != F.col("__b")).select(
+                    "node"
+                )
+                unpersist_ids(spark, f_ids | b_ids | rem_ids)
+                rem, rem_ids = new_rem, set()
+                if n_rem == 0:
+                    break
+                keep = new_rem.withColumnRenamed
+                nxt = _EdgeTable(
+                    sub.edges.join(keep("node", "src"), "src", "semi").join(
+                        keep("node", "dst"), "dst", "semi"
+                    ),
+                    assume_canonical=True,
+                    count=True,
+                )
+                if sub is not t:
+                    sub.release()
+                sub = nxt
+            else:
                 raise ValueError(
                     f"SCC peeling did not finish in {max_rounds} rounds;"
                     " raise max_rounds"
                 )
-        unpersist_ids(spark, sub_ids)
-        out = done_parts[0]
-        for p_ in done_parts[1:]:
-            out = out.unionByName(p_)
+        finally:
+            if sub is not t:
+                sub.release()
         return out, done_ids
 
 
@@ -1252,99 +1275,94 @@ def bow_tie_report(
     The result is materialized; the SCC round checkpoints and every
     sweep's frontier blocks it was built on are freed (kept, with the
     plan lazy, under ``spark.sparkplug.release.enabled=false``)."""
-    scc, ids = _scc(edges, src_col, dst_col, max_rounds)
-    scc = scc.persist()
-    core_row = (
-        scc.groupBy("scc_id")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .orderBy(F.desc("__n"), F.asc("scc_id"))
-        .limit(1)
-        .collect()[0]
-    )
-    core_id = core_row["scc_id"]
-    core = scc.where(F.col("scc_id") == F.lit(core_id)).select("node")
-    # canonicalize the edge table ONCE for every sweep (2 plain, 4
-    # detailed): both gather directions are checkpointed and freed after
-    # the last sweep (the sweeps' frontiers are checkpoints of their own)
-    spark = edges.sparkSession
-    e0 = _canonical_edges(edges, src_col, dst_col).persist()
-    n_e = e0.count()
-    with shuffle_scope(spark, loop_partitions(spark, n_e)):
-        e_fwd, e_rev, e_ids = _both_directions(e0)
-    e0.unpersist()
+    if max_rounds < 1:
+        raise ValueError("max_rounds must be >= 1")
+    # ONE edge table serves the SCC peel and every sweep (2 plain, 4
+    # detailed): the sweeps read the SCC's forward and reversed layouts
+    with _EdgeTable(edges, src_col, dst_col, count=True) as t:
+        if t.n == 0:
+            return t.empty("node {node}, scc_id {node}, region string")
+        scc, ids = _scc(t, max_rounds)
+        scc = t.persist(scc)
+        core_row = (
+            scc.groupBy("scc_id")
+            .agg(F.count(F.lit(1)).alias("__n"))
+            .orderBy(F.desc("__n"), F.asc("scc_id"))
+            .limit(1)
+            .collect()[0]
+        )
+        core_id = core_row["scc_id"]
+        core = scc.where(F.col("scc_id") == F.lit(core_id)).select("node")
 
-    def reach(e: DataFrame, seeds: DataFrame) -> DataFrame:
-        out, sweep_ids = _bfs(e, n_e, seeds, max_hops)
-        ids.update(sweep_ids)
-        return out.select("node")
+        def reach(key: str, seeds: DataFrame) -> DataFrame:
+            out, sweep_ids = _bfs(t, key, seeds, max_hops)
+            ids.update(sweep_ids)
+            return out.select("node")
 
-    fwd = reach(e_fwd, core)
-    rev = reach(e_rev, core)
-    out = (
-        scc.join(fwd.withColumn("__out", F.lit(True)), "node", "left")
-        .join(rev.withColumn("__in", F.lit(True)), "node", "left")
-        .select(
-            "node",
-            "scc_id",
-            F.when(F.col("scc_id") == F.lit(core_id), F.lit("CORE"))
-            .when(F.col("__in").isNotNull(), F.lit("IN"))
-            .when(F.col("__out").isNotNull(), F.lit("OUT"))
-            .otherwise(F.lit("OTHER"))
-            .alias("region"),
-        )
-    )
-    cached = [scc]
-    if detailed:
-        base = out.persist()
-        cached.append(base)
-        in_nodes = base.where(F.col("region") == "IN").select("node")
-        out_nodes = base.where(F.col("region") == "OUT").select("node")
-        # seed the refinement sweeps with the reach sets already
-        # computed: when IN is non-empty every IN node reaches the core,
-        # so reach(core) = fwd ⊆ reach(IN) and reach(IN ∪ fwd) =
-        # reach(IN) — identical result, but the sweep explores only past
-        # the known region (tubes/tendrils) instead of re-walking the
-        # core's whole forward cone; symmetrically rev ⊆
-        # reverse-reach(OUT) when OUT is non-empty.  Empty region ⇒ seed
-        # unaugmented (reach must be empty).
-        region_n = {
-            r["region"]: r["n"]
-            for r in base.groupBy("region")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        fi_seeds = (
-            in_nodes.unionByName(fwd) if region_n.get("IN") else in_nodes
-        )
-        to_seeds = (
-            out_nodes.unionByName(rev) if region_n.get("OUT") else out_nodes
-        )
-        from_in = reach(e_fwd, fi_seeds)
-        to_out = reach(e_rev, to_seeds)
+        fwd = reach("src", core)
+        rev = reach("rev", core)
         out = (
-            base.join(from_in.withColumn("__fi", F.lit(True)), "node", "left")
-            .join(to_out.withColumn("__to", F.lit(True)), "node", "left")
+            scc.join(fwd.withColumn("__out", F.lit(True)), "node", "left")
+            .join(rev.withColumn("__in", F.lit(True)), "node", "left")
             .select(
                 "node",
                 "scc_id",
-                F.when(F.col("region") != "OTHER", F.col("region"))
-                .when(
-                    F.col("__fi").isNotNull() & F.col("__to").isNotNull(),
-                    F.lit("TUBE"),
-                )
-                .when(
-                    F.col("__fi").isNotNull() | F.col("__to").isNotNull(),
-                    F.lit("TENDRIL"),
-                )
-                .otherwise(F.lit("DISCONNECTED"))
+                F.when(F.col("scc_id") == F.lit(core_id), F.lit("CORE"))
+                .when(F.col("__in").isNotNull(), F.lit("IN"))
+                .when(F.col("__out").isNotNull(), F.lit("OUT"))
+                .otherwise(F.lit("OTHER"))
                 .alias("region"),
             )
         )
-    res = materialize_release(out, *cached)
-    unpersist_ids(spark, e_ids)
-    if res is not out:
-        unpersist_ids(spark, ids)
-    return res
+        if detailed:
+            base = t.persist(out)
+            in_nodes = base.where(F.col("region") == "IN").select("node")
+            out_nodes = base.where(F.col("region") == "OUT").select("node")
+            # seed the refinement sweeps with the reach sets already
+            # computed: when IN is non-empty every IN node reaches the
+            # core, so reach(core) = fwd ⊆ reach(IN) and reach(IN ∪ fwd) =
+            # reach(IN) — identical result, but the sweep explores only
+            # past the known region (tubes/tendrils) instead of
+            # re-walking the core's whole forward cone; symmetrically rev
+            # ⊆ reverse-reach(OUT) when OUT is non-empty.  Empty region ⇒
+            # seed unaugmented (reach must be empty).
+            region_n = {
+                r["region"]: r["n"]
+                for r in base.groupBy("region")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .collect()
+            }
+            fi_seeds = (
+                in_nodes.unionByName(fwd) if region_n.get("IN") else in_nodes
+            )
+            to_seeds = (
+                out_nodes.unionByName(rev) if region_n.get("OUT") else out_nodes
+            )
+            from_in = reach("src", fi_seeds)
+            to_out = reach("rev", to_seeds)
+            out = (
+                base.join(from_in.withColumn("__fi", F.lit(True)), "node", "left")
+                .join(to_out.withColumn("__to", F.lit(True)), "node", "left")
+                .select(
+                    "node",
+                    "scc_id",
+                    F.when(F.col("region") != "OTHER", F.col("region"))
+                    .when(
+                        F.col("__fi").isNotNull() & F.col("__to").isNotNull(),
+                        F.lit("TUBE"),
+                    )
+                    .when(
+                        F.col("__fi").isNotNull() | F.col("__to").isNotNull(),
+                        F.lit("TENDRIL"),
+                    )
+                    .otherwise(F.lit("DISCONNECTED"))
+                    .alias("region"),
+                )
+            )
+        res = materialize_release(out)
+        if res is not out:
+            unpersist_ids(t.spark, ids)
+        return res
 
 
 def hits_integer(
@@ -1397,35 +1415,26 @@ def hits_integer(
     what an explicit 0 contributes to every downstream integer sum
     (gather sums and L1 totals alike), so the per-iteration
     nodes-join zero-fill bought nothing but two node-sized joins per
-    round.  Loop shuffles run at a partition count derived from the
-    edge count (:func:`~..partitioning.loop_partitions`) — a cached
-    table's layout pins every downstream join, so AQE alone cannot
-    coalesce these; at production scale the derivation clamps to the
-    session's configured partitions and is a no-op.  Round N-1's blocks
-    are freed as soon as round N's checkpoint lands."""
+    round.  Round N-1's blocks are freed as soon as round N's checkpoint
+    lands."""
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    if assume_canonical:
-        e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    else:
-        e = _canonical_edges(edges, src_col, dst_col)
-    e = e.persist()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    spark = edges.sparkSession
+    with _EdgeTable(
+        edges, src_col, dst_col, assume_canonical=assume_canonical
+    ) as t:
+        return _hits_nano(t, iterations, unit, init_hubs)
+
+
+def _hits_nano(
+    t: _EdgeTable, iterations: int, unit: int, init_hubs: DataFrame | None
+) -> DataFrame:
+    """The loop of :func:`hits_integer` over a lazily persisted edge
+    table."""
+    spark, e = t.spark, t.edges
+    nodes = t.persist(t.nodes())
     n_nodes = nodes.count()
     if n_nodes == 0:
-        for df_ in (e, nodes):
-            df_.unpersist()
-        return nodes.select(
-            "node",
-            F.lit(0).cast("long").alias("hub_units"),
-            F.lit(0).cast("long").alias("auth_units"),
-        )
+        return t.empty("node {node}, hub_units bigint, auth_units bigint")
     if n_nodes >= int(unit):
         raise ValueError(
             f"unit={unit} must exceed the node count ({n_nodes}): every "
@@ -1444,16 +1453,15 @@ def hits_integer(
         .first()
     )
     outdeg_max = int(deg_row["__m"] or 1)
-    n_edges = int(deg_row["__n"] or 0)
+    t.n = int(deg_row["__n"] or 0)
     if outdeg_max * int(unit) * int(unit) >= 2**63:
         raise ValueError(
             f"int64 headroom exceeded: outdeg_max*unit^2 = "
             f"{outdeg_max}*{unit}^2 >= 2^63; pass a smaller unit "
             f"(<= {int((2**63 / outdeg_max) ** 0.5) - 1})"
         )
-    with shuffle_scope(spark, loop_partitions(spark, n_edges)):
-        e_src = e.repartition("src").persist()
-        e_dst = e.repartition("dst").persist()
+    with t.scope():
+        e_src, e_dst = t.layout("src"), t.layout("dst")
 
         def _l1_normalize(df, col, *probes):
             # EAGER local checkpoint; the L1 total (and any extra
@@ -1509,8 +1517,6 @@ def hits_integer(
                 hub0, "hub_units", F.min("hub_units").alias("__min")
             )
             if got["__min"] is not None and got["__min"] < 0:
-                for df_ in (e, nodes, e_src, e_dst):
-                    df_.unpersist()
                 unpersist_ids(spark, prev_ids)
                 raise ValueError(
                     "init_hubs holds a negative hub_units "
@@ -1589,7 +1595,7 @@ def hits_integer(
         # is materialized, the final authority and hub checkpoints that
         # fed it are freed too (the release kill-switch returns `out`
         # itself, still lazy over those blocks)
-        done = materialize_release(out, e, nodes, e_src, e_dst)
+        done = materialize_release(out)
         if done is not out:
             unpersist_ids(spark, _a_ids | prev_ids)
         return done
@@ -1617,31 +1623,27 @@ def label_propagation(
     Output: (node, label BIGINT) for every node with ≥1 edge; nodes
     sharing a label form one community.
 
-    Plan: edges symmetrized, hash-partitioned on src and checkpointed
-    ONCE; each round joins the node-sized label table against the
-    stable edge layout, aggregates (node, label) counts map-side, takes
+    Plan: one edge table over the symmetrized edges, laid out on dst;
+    each round joins the node-sized label table against that stable
+    layout, aggregates (node, label) counts map-side, takes
     the per-node argmax window over ≤degree rows, checkpoints the new
     labels, and releases the previous round's blocks — per-round shuffle
     is edge-count rows of 24 bytes, the lineage-truncation discipline of
     the other iterative loops."""
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    spark = edges.sparkSession
-    fwd = edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-    e0 = (
-        fwd.unionByName(fwd.select(F.col("d").alias("s"), F.col("s").alias("d")))
-        .distinct()
-        .persist()
+    fwd = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    sym = fwd.unionByName(
+        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    n_edges = e0.count()
-    with shuffle_scope(spark, loop_partitions(spark, n_edges)):
-        # partitioned on d — the key every round's label join uses (the
-        # old hash(s) layout re-exchanged the full edge set per round);
-        # partition count derived from the edge count (no-op at scale)
-        e, e_ids = checkpoint_tracked(e0.repartition("d"))
-        e0.unpersist()
+    with _EdgeTable(sym, count=True) as t, t.scope():
+        if t.n == 0:
+            return t.empty("node {node}, label bigint")
+        # partitioned on dst, the key every round's label join uses
+        e = t.layout("dst")
+        # symmetric: every node is a src
         labels, l_ids = checkpoint_tracked(
-            e.select(F.col("s").alias("node"))
+            e.select(F.col("src").alias("node"))
             .distinct()
             .select("node", F.col("node").alias("label"))
         )
@@ -1651,8 +1653,8 @@ def label_propagation(
 
         def step(labels: DataFrame, _) -> DataFrame:
             counts = (
-                e.join(labels.withColumnRenamed("node", "d"), "d")
-                .groupBy(F.col("s").alias("node"), "label")
+                e.join(labels.withColumnRenamed("node", "dst"), "dst")
+                .groupBy(F.col("src").alias("node"), "label")
                 .agg(F.count(F.lit(1)).alias("__c"))
             )
             return (
@@ -1662,7 +1664,6 @@ def label_propagation(
             )
 
         labels, _, _, _ = fixpoint(labels, step, iterations, ids=l_ids)
-        unpersist_ids(spark, e_ids)
         return labels.select(
             "node", F.col("label").cast("long").alias("label")
         )
@@ -1699,13 +1700,8 @@ def pagerank_personalized_integer(
     sd = seeds.select(F.col(seed_col).alias("node")).where(
         F.col("node").isNotNull()
     )
-    return _rank_nano(
-        _canonical_edges(edges, src_col, dst_col),
-        iterations,
-        damping_pct,
-        unit,
-        seeds=sd,
-    )
+    with _EdgeTable(edges, src_col, dst_col) as t:
+        return _rank_nano(t, iterations, damping_pct, unit, seeds=sd)
 
 
 def pagerank_weighted_integer(
@@ -1732,18 +1728,5 @@ def pagerank_weighted_integer(
     tells you the max safe ``unit`` when it does not.
 
     Returns (node, rank_nano)."""
-    e = (
-        edges.select(
-            F.col(src_col).alias("src"),
-            F.col(dst_col).alias("dst"),
-            F.col(weight_col).cast("long").alias("w"),
-        )
-        .where(
-            F.col("src").isNotNull()
-            & F.col("dst").isNotNull()
-            & (F.col("w") > 0)
-        )
-        .groupBy("src", "dst")
-        .agg(F.sum("w").alias("w"))
-    )
-    return _rank_nano(e, iterations, damping_pct, unit)
+    with _EdgeTable(edges, src_col, dst_col, weight_col=weight_col) as t:
+        return _rank_nano(t, iterations, damping_pct, unit)

@@ -35,6 +35,14 @@ __all__ = [
 ]
 
 
+def _no_groups(spark, ids: set[int], id_type) -> DataFrame:
+    """The empty (id, group_id) result of an empty pair list, with the
+    blocks of its (empty) edge checkpoint ``ids`` freed."""
+    unpersist_ids(spark, ids)
+    t = id_type.simpleString()
+    return spark.createDataFrame([], f"id {t}, group_id {t}")
+
+
 def connected_components_star(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -64,6 +72,8 @@ def connected_components_star(
     )
     spark = pairs.sparkSession
     n_edges = e.count()
+    if n_edges == 0:
+        return _no_groups(spark, e_ids, e.schema["u"].dataType)
 
     # convergence probe: (count, hash-sum, hash-xor) of the edge set
     # changing ⟹ not converged; matching stats trigger ONE exact exceptAll
@@ -169,6 +179,8 @@ def near_dup_groups(
         reliable=reliable_checkpoint,
     )
     n_edges = edges0.count()
+    if n_edges == 0:
+        return _no_groups(spark, edge0_ids, edges0.schema["src"].dataType)
     with shuffle_scope(spark, loop_partitions(spark, n_edges)):
         # hash-partitioned on dst — the key every round's label join uses
         # (the un-partitioned layout re-exchanged the edge set per round);

@@ -1,7 +1,9 @@
 """The shared integer PageRank core: the exact identities that let the
 plain, personalized and weighted tiers run one loop, and the
 block-release contract every iterative graph and components operator
-keeps (only the blocks the returned DataFrame reads stay persisted)."""
+keeps (only the blocks the returned DataFrame reads stay persisted, none
+on an empty graph), and the edge-table contract of the directed
+operators (a NULL endpoint is no node; a cached input stays cached)."""
 
 import pytest
 
@@ -10,11 +12,14 @@ from sparkplug_spark.operators import (
     bow_tie_report,
     connected_components_star,
     coreness,
+    fold_edges,
     hits,
+    hits_incremental,
     hits_integer,
     label_propagation,
     near_dup_groups,
     pagerank,
+    pagerank_incremental,
     pagerank_integer,
     pagerank_personalized_integer,
     pagerank_weighted_integer,
@@ -117,3 +122,107 @@ def test_only_the_returned_blocks_stay_persisted(spark, op):
         jmap = registry()
         for rid in left:
             jmap.get(rid).unpersist(False)
+
+
+def _blocks(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+#: BLOCK_CASES plus the warm-start tiers, called with every stored vector
+#: and edge batch empty
+EMPTY_CASES = {
+    **{op: call for op, (call, _) in BLOCK_CASES.items()},
+    "pagerank_incremental": lambda e, s: pagerank_incremental(
+        s.selectExpr("node", "0L AS rank_nano"), e, e
+    ),
+    "hits_incremental": lambda e, s: hits_incremental(
+        s.selectExpr("node", "0L AS hub_units"), e, e
+    ),
+}
+
+_NODE_RANK = [("node", "bigint"), ("rank_nano", "bigint")]
+_NODE_HITS = [("node", "bigint"), ("hub_units", "bigint"), ("auth_units", "bigint")]
+_NODE_REGION = [("node", "bigint"), ("scc_id", "bigint"), ("region", "string")]
+_GROUPS = [("id", "bigint"), ("group_id", "bigint")]
+EMPTY_DTYPES = {
+    "hits_integer": _NODE_HITS,
+    "hits_incremental": _NODE_HITS,
+    "pagerank_integer": _NODE_RANK,
+    "pagerank_incremental": _NODE_RANK,
+    "pagerank_weighted_integer": _NODE_RANK,
+    "pagerank": [("node", "bigint"), ("rank", "double")],
+    "hits": [("node", "bigint"), ("hub", "double"), ("authority", "double")],
+    "coreness": [("item", "bigint"), ("degree", "bigint"), ("core", "bigint")],
+    "label_propagation": [("node", "bigint"), ("label", "bigint")],
+    "near_dup_groups": _GROUPS,
+    "connected_components_star": _GROUPS,
+    "strongly_connected_components": [("node", "bigint"), ("scc_id", "bigint")],
+    "bfs_distances": [("node", "bigint"), ("distance", "bigint")],
+    "bow_tie_report": _NODE_REGION,
+    "bow_tie_report_detailed": _NODE_REGION,
+}
+
+
+@pytest.mark.parametrize("op", sorted(EMPTY_CASES))
+def test_empty_graph_is_an_empty_typed_result_with_no_blocks(spark, op):
+    """The seed set is empty too: on an empty graph the seeds would be the
+    only nodes, and the personalized tier rejects an empty seed set."""
+    e = spark.createDataFrame([], "src long, dst long, weight long")
+    seeds = spark.createDataFrame([], "node long")
+    before = _blocks(spark)
+    try:
+        if op == "pagerank_personalized_integer":
+            with pytest.raises(ValueError, match="seeds must be non-empty"):
+                EMPTY_CASES[op](e, seeds)
+        else:
+            out = EMPTY_CASES[op](e, seeds)
+            assert out.collect() == []
+            assert out.dtypes == EMPTY_DTYPES[op]
+        left = _blocks(spark) - before
+        assert not left, (op, left)
+    finally:
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        for rid in _blocks(spark) - before:
+            jmap.get(rid).unpersist(False)
+
+
+#: every directed operator over [(1, 2), (2, NULL), (NULL, 3)]
+DIRECTED = {
+    op: BLOCK_CASES[op][0]
+    for op in (
+        "pagerank",
+        "hits",
+        "bfs_distances",
+        "pagerank_integer",
+        "pagerank_personalized_integer",
+        "pagerank_weighted_integer",
+        "hits_integer",
+        "label_propagation",
+        "strongly_connected_components",
+        "bow_tie_report",
+        "bow_tie_report_detailed",
+    )
+}
+
+
+@pytest.mark.parametrize("op", sorted(DIRECTED))
+def test_a_null_endpoint_is_not_a_node(spark, op):
+    e = spark.createDataFrame(
+        [(1, 2, 2), (2, None, 2), (None, 3, 2)],
+        "src long, dst long, weight long",
+    )
+    seeds = spark.createDataFrame([(1,)], "node long")
+    assert {r[0] for r in DIRECTED[op](e, seeds).collect()} == {1, 2}
+
+
+@pytest.mark.parametrize("assume_canonical", [False, True])
+@pytest.mark.parametrize("op", [pagerank_integer, hits_integer])
+def test_a_cached_input_stays_cached(spark, op, assume_canonical):
+    store = fold_edges(None, _edges(spark, DANGLING)).persist()
+    try:
+        store.count()
+        level = store.storageLevel
+        op(store, iterations=2, assume_canonical=assume_canonical).collect()
+        assert store.storageLevel == level
+    finally:
+        store.unpersist()
