@@ -9846,7 +9846,7 @@ def _extension_oracles() -> dict[str, str]:
                    FROM d),
             keys AS (SELECT s FROM e0 GROUP BY s HAVING count(*) <= 100),
             e AS (SELECT e0.* FROM e0 JOIN keys USING (s)),
-            sz AS (SELECT doc_id, count(*) AS sz FROM e GROUP BY doc_id),
+            sz AS (SELECT doc_id, count(*) AS sz FROM e0 GROUP BY doc_id),
             inter AS (
               SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
               FROM e a JOIN e b ON a.s = b.s AND a.doc_id < b.doc_id
@@ -9866,7 +9866,7 @@ def _extension_oracles() -> dict[str, str]:
                    FROM d),
             keys AS (SELECT s FROM e0 GROUP BY s HAVING count(*) <= 100),
             e AS (SELECT e0.* FROM e0 JOIN keys USING (s)),
-            sz AS (SELECT doc_id, count(*) AS sz FROM e GROUP BY doc_id),
+            sz AS (SELECT doc_id, count(*) AS sz FROM e0 GROUP BY doc_id),
             inter AS (
               SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
               FROM e a JOIN e b ON a.s = b.s AND a.doc_id < b.doc_id
@@ -16578,7 +16578,7 @@ def oracle_sql() -> dict[str, str]:
         cjk_e AS MATERIALIZED (
           SELECT cjk_e0.* FROM cjk_e0 JOIN cjk_keys USING (s)
         ),
-        cjk_sz AS (SELECT doc_id, count(*) AS sz FROM cjk_e GROUP BY doc_id),
+        cjk_sz AS (SELECT doc_id, count(*) AS sz FROM cjk_e0 GROUP BY doc_id),
         cjk_inter AS (
           SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
           FROM cjk_e a JOIN cjk_e b ON a.s = b.s AND a.doc_id < b.doc_id

@@ -1,10 +1,10 @@
 """Dropped-work metrics for capped operators ("no silent caps").
 
-Several scale guards intentionally drop work: ``blocked_link`` skips
-blocks larger than ``max_block_size``; ``jaccard_ngram_pairs`` /
-``minhash_lsh_pairs`` drop stop keys hotter than ``max_key_freq``.  Each
-such operator accepts ``metrics: Observation`` and reports EXACT counts
-of what the cap removed.
+Scale guards that drop work report it here.  The pair family's hot-key
+cap (``operators/_pairs.py::hot_keys``) is the main one: every operator
+that takes ``metrics: Observation`` (``blocked_link``,
+``jaccard_ngram_pairs``, ``containment_pairs``, ``tfidf_cosine_pairs``,
+``minhash_lsh_pairs``) gets EXACT counts of what its cap removed.
 
 Why a dedicated query instead of an observe node inside the operator's
 own plan: the capped subtree is the *broadcast build side* of an

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..caching import materialize_release
+from ._pairs import drop_hot_keys, same_key_pairs
 
 __all__ = ["basket_pairs", "skipgram_pairs"]
 
@@ -66,18 +67,9 @@ def basket_pairs(
     item_counts = bi.groupBy("__i").agg(
         F.count(F.lit(1)).cast("long").alias("__n_item")
     )
-    sizes = bi.groupBy("__b").agg(F.count(F.lit(1)).alias("__sz"))
-    small = bi.join(
-        F.broadcast(sizes.filter(F.col("__sz") > max_basket_size)),
-        "__b",
-        "left_anti",
-    )
-    left = small.select(F.col("__b"), F.col("__i").alias("item_a"))
-    right = small.select(F.col("__b"), F.col("__i").alias("item_b"))
     pairs = (
-        left.join(right, "__b")
-        .filter(F.col("item_a") < F.col("item_b"))
-        .groupBy("item_a", "item_b")
+        same_key_pairs(drop_hot_keys(bi, ["__b"], max_basket_size), ["__b"], "__i")
+        .groupBy(F.col("id_a").alias("item_a"), F.col("id_b").alias("item_b"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_baskets"))
         .filter(F.col("n_baskets") >= min_count)
     )

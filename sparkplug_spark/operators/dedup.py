@@ -36,8 +36,8 @@ from ..functions.text import (
     word_shingles_pd,
 )
 from ..caching import materialize_release
-from ..metrics import observe_dropped
 from ..partitioning import spread
+from ._pairs import drop_hot_keys, hot_keys, same_key_pairs
 
 __all__ = [
     "cdc_near_dup_pairs",
@@ -165,16 +165,14 @@ def jaccard_ngram_pairs(
 
     shingle-inverted-index self-join: |A∩B| from the join, sizes from a
     narrow pre-agg; J = inter / (|A| + |B| - inter).  Shingles occurring in
-    more than ``max_key_freq`` docs are dropped from the index (stop-key
-    de-skew); exactness holds for pairs whose overlap isn't exclusively
-    stop shingles — standard at-scale trade, disable with a large value.
+    more than ``max_key_freq`` docs are dropped from the join (stop-key
+    de-skew) but still count in each doc's size, so a score is exact for
+    every pair that shares no stop shingle and otherwise a lower bound
+    that never exceeds the true Jaccard — standard at-scale trade,
+    disable with ``max_key_freq=0`` or a large value.
 
-    No silent caps: pass an ``Observation`` as ``metrics`` to get exact
-    ``dropped_keys`` (stop shingles removed) and ``dropped_entries``
-    (index postings they covered), available as soon as this returns.
-    Implemented as a dedicated tiny query over the cached index (see
-    ``sparkplug_spark.metrics``) because an observe node inside the
-    anti-join's broadcast build side is prunable by AQE."""
+    Pass an ``Observation`` as ``metrics`` for exact ``dropped_keys`` /
+    ``dropped_entries`` counts (``_pairs.hot_keys``)."""
     sh = (
         spread(df)
         # join/shuffle on a 60-bit hash of the shingle, not the string:
@@ -190,37 +188,8 @@ def jaccard_ngram_pairs(
         # tokenize+explode subplan for each
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if max_key_freq:
-        # broadcast the HOT keys (freq > cap) and anti-join them away: the
-        # hot set stays tiny by definition, while the keep-set grows with
-        # the corpus and would be an unbounded broadcast at 100 TB
-        hot = (
-            sh.groupBy("sh").agg(F.count(F.lit(1)).alias("f"))
-            .filter(F.col("f") > max_key_freq)
-        )
-        if metrics is not None:
-            observe_dropped(
-                hot,
-                metrics,
-                dropped_keys=F.count(F.lit(1)),
-                dropped_entries=F.sum("f"),
-            )
-        sh = sh.join(F.broadcast(hot.select("sh")), "sh", "left_anti")
-    elif metrics is not None:
-        raise ValueError(
-            "metrics requires an active stop-key cap (max_key_freq > 0)"
-        )
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
     out = (
-        inter.join(sizes.withColumnsRenamed({"id": "id_a", "sz": "sz_a"}), "id_a")
-        .join(sizes.withColumnsRenamed({"id": "id_b", "sz": "sz_b"}), "id_b")
+        _shingle_overlaps(sh, max_key_freq, metrics)
         .withColumn(
             "jaccard",
             F.col("inter").cast("double")
@@ -232,6 +201,24 @@ def jaccard_ngram_pairs(
     # pair lists are orders smaller than the exploded shingle index; trade
     # block storage of the output for releasing the index cache
     return materialize_release(out, sh, release=release)
+
+
+def _shingle_overlaps(
+    sh: DataFrame, max_key_freq: int, metrics: Observation | None
+) -> DataFrame:
+    """(id_a, id_b, inter, sz_a, sz_b) for every doc pair sharing a kept
+    shingle of the (id, sh) index: ``inter`` counts the kept shingles they
+    share, the sizes count ALL of each doc's shingles, taken before the
+    stop-key cap."""
+    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
+    kept = drop_hot_keys(sh, ["sh"], max_key_freq or None, metrics)
+    return (
+        same_key_pairs(kept, ["sh"])
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("inter"))
+        .join(sizes.withColumnsRenamed({"id": "id_a", "sz": "sz_a"}), "id_a")
+        .join(sizes.withColumnsRenamed({"id": "id_b", "sz": "sz_b"}), "id_b")
+    )
 
 
 def minhash_signatures(
@@ -304,16 +291,11 @@ def minhash_lsh_join(
     side are anti-joined away, as in :func:`minhash_lsh_pairs`."""
     assert num_hashes % bands == 0
     a = _band_entries(new_sigs, num_hashes, bands).alias("a")
-    bent = _band_entries(corpus_sigs, num_hashes, bands)
-    if max_key_freq:
-        hot = (
-            bent.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("f"))
-            .filter(F.col("f") > max_key_freq)
-            .select("band", "bucket")
-        )
-        bent = bent.join(F.broadcast(hot), ["band", "bucket"], "left_anti")
-    b = bent.alias("b")
+    b = drop_hot_keys(
+        _band_entries(corpus_sigs, num_hashes, bands),
+        ["band", "bucket"],
+        max_key_freq or None,
+    ).alias("b")
     cand = (
         a.join(
             b,
@@ -360,12 +342,10 @@ def minhash_lsh_pairs(
     (candidate recall is governed by bands/rows: P(candidate) =
     1-(1-J^r)^b).
 
-    No silent caps: pass an ``Observation`` as ``metrics`` for exact
-    ``dropped_keys`` / ``dropped_entries`` counts of the hot (band,
-    bucket) groups the ``max_key_freq`` de-skew cap removed — same
-    dedicated-metrics-query shape as :func:`jaccard_ngram_pairs`."""
+    Pass an ``Observation`` as ``metrics`` for exact ``dropped_keys`` /
+    ``dropped_entries`` counts of the hot (band, bucket) groups
+    (``_pairs.hot_keys``)."""
     assert num_hashes % bands == 0
-    rows = num_hashes // bands
     # ONE fused Arrow crossing yields shingles (for exact verification)
     # AND the minhash signature (no gram explode, no signature shuffle);
     # persisted: band entries + both verify joins consume it
@@ -382,61 +362,13 @@ def minhash_lsh_pairs(
         "id", *[F.col("__sig")[i].alias(f"mh{i}") for i in range(num_hashes)]
     )
 
-    band_entries = sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        hash60(
-                            F.concat_ws(
-                                "-", *[F.col(f"mh{i * rows + j}") for j in range(rows)]
-                            )
-                        ).alias("bucket"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
-    if max_key_freq:
-        # anti-join on the (small) hot-bucket set — see jaccard_ngram_pairs
-        # (incl. the dropped-work metrics query on the hot set)
-        hot_f = (
-            band_entries.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("f"))
-            .filter(F.col("f") > max_key_freq)
-        )
-        if metrics is not None:
-            observe_dropped(
-                hot_f,
-                metrics,
-                dropped_keys=F.count(F.lit(1)),
-                dropped_entries=F.sum("f"),
-            )
-        band_entries = band_entries.join(
-            F.broadcast(hot_f.select("band", "bucket")),
-            ["band", "bucket"],
-            "left_anti",
-        )
-    elif metrics is not None:
-        raise ValueError(
-            "metrics requires an active stop-key cap (max_key_freq > 0)"
-        )
-
-    a = band_entries.alias("a")
-    b = band_entries.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
+    band_entries = drop_hot_keys(
+        _band_entries(sig, num_hashes, bands),
+        ["band", "bucket"],
+        max_key_freq or None,
+        metrics,
     )
+    cand = same_key_pairs(band_entries, ["band", "bucket"]).distinct()
     sh = base.select("id", "shingles")
     out = (
         cand.join(sh.withColumnsRenamed({"id": "id_a", "shingles": "sh_a"}), "id_a")
@@ -507,32 +439,9 @@ def simhash_pairs(
             )
         ).alias("cc"),
     ).select("id", "sh", "cc.chunk_id", "cc.chunk")
-    if max_key_freq:
-        # anti-join on the (small) hot-bucket set — see jaccard_ngram_pairs
-        hot = (
-            entries.groupBy("chunk_id", "chunk")
-            .agg(F.count(F.lit(1)).alias("f"))
-            .filter(F.col("f") > max_key_freq)
-            .select("chunk_id", "chunk")
-        )
-        entries = entries.join(
-            F.broadcast(hot), ["chunk_id", "chunk"], "left_anti"
-        )
-    a = entries.alias("a")
-    b = entries.alias("b")
+    entries = drop_hot_keys(entries, ["chunk_id", "chunk"], max_key_freq or None)
     out = (
-        a.join(
-            b,
-            (F.col("a.chunk_id") == F.col("b.chunk_id"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.sh").alias("sh_a"),
-            F.col("b.sh").alias("sh_b"),
-        )
+        same_key_pairs(entries, ["chunk_id", "chunk"], carry=["sh"])
         .distinct()
         # LONG, not Spark's INT/DuckDB's TINYINT — canonicalization-stable
         # across engines (the r2 hash-FAIL class was implicit int widths)
@@ -598,17 +507,7 @@ def _verify_bucket_candidates(
     already be persisted (both self-join sides consume it)."""
     from ..functions.vectors import vec_dot, vec_norm
 
-    a, b = entries.alias("a"), entries.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    cand = same_key_pairs(entries, ["band", "bucket"]).distinct()
     vecs = spread(df).select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
@@ -848,10 +747,13 @@ def containment_pairs(
     of a pair are tested; near-identical docs emit two rows.
 
     Scale shape: identical to the Jaccard tier — one shingle-hash
-    inverted index (computed once, persisted, released on return),
-    stop-key de-skew cap with exact dropped-work metrics, intersections
-    counted once per UNORDERED pair then fanned to the two directed
-    tests.  Only 8-byte hashes shuffle."""
+    inverted index (computed once, persisted, released on return), the
+    same stop-key cap and size rule (a score never exceeds the true
+    containment), intersections counted once per UNORDERED pair then
+    fanned to the two directed tests.  Only 8-byte hashes shuffle.
+
+    Pass an ``Observation`` as ``metrics`` for exact ``dropped_keys`` /
+    ``dropped_entries`` counts (``_pairs.hot_keys``)."""
     sh = (
         spread(df)
         .select(
@@ -860,35 +762,10 @@ def containment_pairs(
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if max_key_freq:
-        hot = (
-            sh.groupBy("sh").agg(F.count(F.lit(1)).alias("f"))
-            .filter(F.col("f") > max_key_freq)
-        )
-        if metrics is not None:
-            observe_dropped(
-                hot,
-                metrics,
-                dropped_keys=F.count(F.lit(1)),
-                dropped_entries=F.sum("f"),
-            )
-        sh = sh.join(F.broadcast(hot.select("sh")), "sh", "left_anti")
-    elif metrics is not None:
-        raise ValueError(
-            "metrics requires an active stop-key cap (max_key_freq > 0)"
-        )
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-        .join(sizes.withColumnsRenamed({"id": "id_a", "sz": "sz_a"}), "id_a")
-        .join(sizes.withColumnsRenamed({"id": "id_b", "sz": "sz_b"}), "id_b")
-        # consumed TWICE by the directed union below: without persist the
-        # Σf² bucket join + both size joins execute once per branch
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # consumed TWICE by the directed union below: without persist the
+    # Σf² bucket join + both size joins execute once per branch
+    inter = _shingle_overlaps(sh, max_key_freq, metrics).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     directed = inter.select(
         F.col("id_a").alias("id_sub"),
@@ -935,10 +812,13 @@ def tfidf_cosine_pairs(
     Output (id_a, id_b, cosine) with id_a < id_b.
 
     Scale shape: the same inverted-index self-join as the Jaccard tier —
-    only (term-hash, id, weight) triples shuffle; stop-key cap with
-    exact dropped-work metrics de-skews corpus-common terms (which
-    near-zero idf would contribute ~nothing anyway); squared norms come
-    from a narrow pre-aggregate over the same persisted index."""
+    only (term-hash, id, weight) triples shuffle; the stop-key cap
+    de-skews corpus-common terms (which near-zero idf would contribute
+    ~nothing anyway); squared norms come from a narrow pre-aggregate over
+    the same persisted index.
+
+    Pass an ``Observation`` as ``metrics`` for exact ``dropped_keys`` /
+    ``dropped_entries`` counts (``_pairs.hot_keys``)."""
     sh0 = (
         spread(df)
         .select(
@@ -956,24 +836,13 @@ def tfidf_cosine_pairs(
         F.countDistinct("id").cast("long").alias("__n")
     )
     dfreq = sh0.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
-    if max_key_freq:
-        hot = dfreq.filter(F.col("df") > max_key_freq)
-        if metrics is not None:
-            observe_dropped(
-                hot,
-                metrics,
-                dropped_keys=F.count(F.lit(1)),
-                dropped_entries=F.sum("df"),
-            )
-        keep = dfreq.filter(F.col("df") <= max_key_freq)
-    elif metrics is not None:
-        raise ValueError(
-            "metrics requires an active stop-key cap (max_key_freq > 0)"
-        )
-    else:
-        keep = dfreq
+    # idf needs each kept term's df: one inner join on the kept keys both
+    # caps the index and carries df, where the shared anti-join would
+    # add a second join to the plan
+    if hot_keys(sh0, ["sh"], max_key_freq or None, metrics) is not None:
+        dfreq = dfreq.filter(F.col("df") <= max_key_freq)
     sh = (
-        sh0.join(keep, "sh")
+        sh0.join(dfreq, "sh")
         .crossJoin(F.broadcast(n_docs))
         .select(
             "id",
@@ -983,12 +852,10 @@ def tfidf_cosine_pairs(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     norms = sh.groupBy("id").agg(F.sum(F.col("w") * F.col("w")).alias("n2"))
-    a = sh.alias("a")
-    b = sh.alias("b")
     dots = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.sum(F.col("a.w") * F.col("b.w")).alias("dot"))
+        same_key_pairs(sh, ["sh"], carry=["w"])
+        .groupBy("id_a", "id_b")
+        .agg(F.sum(F.col("w_a") * F.col("w_b")).alias("dot"))
     )
     out = (
         dots.join(norms.withColumnsRenamed({"id": "id_a", "n2": "na2"}), "id_a")
@@ -1039,6 +906,16 @@ def jaccard_prefix_pairs(
     a PER-DOC window (no global rank); the join shuffles only prefix
     postings; verification joins the (small) candidate pair list against
     per-doc shingle arrays and intersects in codegen."""
+    out, intermediates = _prefix_pairs(df, text_col, id_col, n, threshold)
+    return materialize_release(out, *intermediates, release=release)
+
+
+def _prefix_pairs(
+    df: DataFrame, text_col: str, id_col: str, n: int, threshold: float
+) -> tuple[DataFrame, tuple[DataFrame, ...]]:
+    """The lazy plan of :func:`jaccard_prefix_pairs` and the persisted
+    intermediates the caller releases once it has materialized its own
+    result."""
     sh = (
         spread(df)
         .select(
@@ -1064,16 +941,8 @@ def jaccard_prefix_pairs(
         .select("id", "sh", "sz")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    a = prefix.alias("a")
-    b = prefix.alias("b")
     cand = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.id") < F.col("b.id")))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.sz").alias("sz_a"),
-            F.col("b.sz").alias("sz_b"),
-        )
+        same_key_pairs(prefix, ["sh"], carry=["sz"])
         # length filter BEFORE the dedup shuffle: J >= t forces
         # min >= t * max
         .filter(
@@ -1103,7 +972,7 @@ def jaccard_prefix_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return materialize_release(out, sh, prefix, sets, release=release)
+    return out, (sh, prefix, sets)
 
 
 def dedup_threshold_curve(
@@ -1136,9 +1005,7 @@ def dedup_threshold_curve(
         raise ValueError("thresholds must be ppm values in (0, 1e6]")
     spark = df.sparkSession
     lo = min(thresholds_ppm) / 1e6
-    pairs = jaccard_prefix_pairs(
-        df, text_col=text_col, id_col=id_col, n=n, threshold=lo
-    ).select("id_a", "id_b", "jaccard")
+    pairs, intermediates = _prefix_pairs(df, text_col, id_col, n, lo)
     th = F.broadcast(
         spark.createDataFrame(
             [(int(t),) for t in sorted(set(thresholds_ppm))],
@@ -1169,9 +1036,7 @@ def dedup_threshold_curve(
             F.coalesce("n_docs", F.lit(0)).cast("long").alias("n_docs"),
         )
     )
-    from ..caching import materialize_release
-
-    return materialize_release(out, matched)
+    return materialize_release(out, matched, *intermediates)
 
 
 def cdc_near_dup_pairs(
@@ -1200,10 +1065,7 @@ def cdc_near_dup_pairs(
     the hot-key blowup; the distinct (id, chunk) table is persisted
     because BOTH self-join arms alias it.  One chunk-keyed shuffle for
     the join, one id-pair aggregate."""
-    from pyspark.sql import functions as F
-
     from .cleaning import chunk_content_defined
-    from ..caching import materialize_release
 
     chunks = chunk_content_defined(
         df,
@@ -1215,45 +1077,22 @@ def cdc_near_dup_pairs(
     ).select(F.col(id_col).alias("__id"), "chunk_md5")
     d = chunks.distinct().persist()
     per_doc = d.groupBy("__id").agg(F.count(F.lit(1)).alias("__n"))
-    df_counts = d.groupBy("chunk_md5").agg(
-        F.count(F.lit(1)).alias("__df")
-    )
-    keep = d.join(
-        df_counts.where(F.col("__df") <= max_chunk_df).select("chunk_md5"),
-        "chunk_md5",
-    ).persist()
-    a = keep.select(
-        F.col("__id").alias("__ida"), F.col("chunk_md5")
-    )
-    b = keep.select(
-        F.col("__id").alias("__idb"), F.col("chunk_md5")
-    )
+    keep = drop_hot_keys(d, ["chunk_md5"], max_chunk_df).persist()
     pairs = (
-        a.join(b, "chunk_md5")
-        .where(F.col("__ida") < F.col("__idb"))
-        .groupBy("__ida", "__idb")
+        same_key_pairs(keep, ["chunk_md5"], "__id")
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .where(F.col("n_shared") >= int(min_shared))
     )
-    na = per_doc.select(
-        F.col("__id").alias("__ida"), F.col("__n").alias("__na")
-    )
-    nb = per_doc.select(
-        F.col("__id").alias("__idb"), F.col("__n").alias("__nb")
-    )
     out = (
-        pairs.join(na, "__ida")
-        .join(nb, "__idb")
+        pairs.join(per_doc.withColumnsRenamed({"__id": "id_a", "__n": "__na"}), "id_a")
+        .join(per_doc.withColumnsRenamed({"__id": "id_b", "__n": "__nb"}), "id_b")
         .select(
-            F.col("__ida").alias("id_a"),
-            F.col("__idb").alias("id_b"),
+            "id_a",
+            "id_b",
             "n_shared",
-            F.expr("n_shared * 1000000L div __na").alias(
-                "containment_a_ppm"
-            ),
-            F.expr("n_shared * 1000000L div __nb").alias(
-                "containment_b_ppm"
-            ),
+            F.expr("n_shared * 1000000L div __na").alias("containment_a_ppm"),
+            F.expr("n_shared * 1000000L div __nb").alias("containment_b_ppm"),
         )
     )
     return materialize_release(out, d, keep)

@@ -16,8 +16,8 @@ from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..caching import materialize_release
-from ..metrics import observe_dropped
 from ..partitioning import spread
+from ._pairs import drop_hot_keys, same_key_pairs
 
 __all__ = [
     "asof_join",
@@ -297,13 +297,8 @@ def blocked_link(
     key, never an OOM).  Levenshtein runs JVM-side inside codegen on the
     already-filtered candidates.
 
-    No silent caps: pass an ``Observation`` as ``metrics`` to get exact
-    ``dropped_blocks`` / ``dropped_rows`` counts (rows excluded from
-    candidate generation by ``max_block_size``), available as soon as
-    this function returns.  Implemented as a dedicated tiny query over
-    the persisted projection (see ``sparkplug_spark.metrics``) because an
-    observe node inside the anti-join's broadcast build side is prunable
-    by AQE."""
+    Pass an ``Observation`` as ``metrics`` for exact ``dropped_blocks`` /
+    ``dropped_rows`` counts (``_pairs.hot_keys``)."""
     if not block_cols:
         raise ValueError("block_cols must be non-empty")
     blocks = [F.col(c) for c in block_cols]
@@ -325,16 +320,12 @@ def blocked_link(
         F.col(id_col).alias("__id"),
         F.col(name_col).alias("__name"),
     )).persist()
-    sizes = base.groupBy("__blk").agg(F.count(F.lit(1)).alias("__sz"))
-    oversized = sizes.filter(F.col("__sz") > max_block_size)
-    if metrics is not None:
-        observe_dropped(
-            oversized,
-            metrics,
-            dropped_blocks=F.count(F.lit(1)),
-            dropped_rows=F.sum("__sz"),
-        )
-    small = base.join(F.broadcast(oversized), "__blk", "left_anti")
+    small = drop_hot_keys(
+        base, ["__blk"], max_block_size, metrics, ("dropped_blocks", "dropped_rows")
+    )
+    # its own join, not ``same_key_pairs``: this one renames each side
+    # BEFORE the join, which keeps the optimized and physical plans the
+    # graph_pair benchmark measures unchanged
     left = small.select(
         "__blk", F.col("__id").alias("id_a"), F.col("__name").alias("__na")
     )
@@ -504,17 +495,7 @@ def edit_distance_pairs(
         .select("id", "g", "occ")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    a, b = prefix.alias("a"), prefix.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.g") == F.col("b.g"))
-            & (F.col("a.occ") == F.col("b.occ"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    cand = same_key_pairs(prefix, ["g", "occ"]).distinct()
     # short sliver: pairs where BOTH sides are under the bound's reach
     short = base.filter(F.col("len") < min_long_len).select("id", "len")
     sa, sb = short.alias("sa"), short.alias("sb")

@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ._pairs import same_key_pairs
+
 __all__ = [
     "ASPECT_BUCKETS",
     "aspect_buckets",
@@ -1228,21 +1230,15 @@ def dhash_pairs(
             )
         ).alias("__b"),
     ).select("__id", "__hi", "__lo", "__b.band", "__b.chunk")
-    a, b = chunked.alias("a"), chunked.alias("b")
     ham = (
-        F.bit_count(F.col("a.__hi").bitwiseXOR(F.col("b.__hi")))
-        + F.bit_count(F.col("a.__lo").bitwiseXOR(F.col("b.__lo")))
+        F.bit_count(F.col("__hi_a").bitwiseXOR(F.col("__hi_b")))
+        + F.bit_count(F.col("__lo_a").bitwiseXOR(F.col("__lo_b")))
     ).cast("long")
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.__id") < F.col("b.__id")),
-        )
+        same_key_pairs(chunked, ["band", "chunk"], "__id", carry=["__hi", "__lo"])
         .select(
-            F.col("a.__id").alias(f"{id_col}_a"),
-            F.col("b.__id").alias(f"{id_col}_b"),
+            F.col("id_a").alias(f"{id_col}_a"),
+            F.col("id_b").alias(f"{id_col}_b"),
             ham.alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)

@@ -1,7 +1,8 @@
-"""The PageRank family's ``queries()`` entries against their DuckDB
-``oracle_sql()`` twins, compared the way ``tools/check_correctness.py``
-compares them: canon-safe output types on both engines, the same column
-set, and equal ``table_digest`` value hashes."""
+"""The PageRank and pair families' ``queries()`` entries against their
+DuckDB ``oracle_sql()`` twins, compared the way
+``tools/check_correctness.py`` compares them: canon-safe output types on
+both engines, the same column set, and equal ``table_digest`` value
+hashes."""
 
 import importlib.util
 import os
@@ -29,6 +30,22 @@ RANK_ENTRIES = (
     "textrank_tokens",
 )
 
+#: the pair family: every entry built on ``operators/_pairs.py``
+PAIR_ENTRIES = (
+    "dedup_jaccard_pairs",
+    "dedup_jaccard_cjk",
+    "containment_pairs",
+    "tfidf_pairs",
+    "dedup_minhash_lsh",
+    "dedup_simhash",
+    "basket_pairs",
+    "blocked_link",
+    "dedup_jaccard_prefix",
+    "dedup_threshold_curve",
+    "cdc_dup_pairs",
+    "fuzzy_name_pairs",
+)
+
 
 @pytest.fixture(scope="module")
 def duck(sf_dir):
@@ -41,7 +58,7 @@ def duck(sf_dir):
     con.close()
 
 
-@pytest.mark.parametrize("name", RANK_ENTRIES)
+@pytest.mark.parametrize("name", RANK_ENTRIES + PAIR_ENTRIES)
 def test_rank_entry_matches_oracle_twin(spark, duck, sf_dir, name):
     sdf = entry.queries()[name](spark, sf_dir)
     sql = entry.oracle_sql()[name]
