@@ -7,23 +7,34 @@ without temp views or UDFs.  Like the reference's generated ``select``
 conditions and backtick values parsed alone before they are embedded
 (``_rule_columns``):
 
-- one rule = one ``df.withColumns({...})`` projection in which every
-  expression references the rule's *input* columns (identical to the
-  reference's single generated ``select``, ``SparkPlug.scala:98-107``);
+- one rule = one ``CASE WHEN`` text per written column, every expression
+  reading the rule's *input* columns (identical to the reference's single
+  generated ``select``, ``SparkPlug.scala:98-107``);
 - rules fold sequentially, so rule k+1 observes rule k's writes
-  (``SparkPlug.scala:42-50``);
+  (``SparkPlug.scala:42-50``).  ``SparkPlug.plug`` applies the fold in
+  *levels*: a maximal run of consecutive rules in which no rule reads a
+  column an earlier rule of the run writes is one ``df.withColumns``, one
+  analysis and one ``Project``, because each rule's input is the level's
+  input.  What a rule reads comes from the parse of its fragments (column
+  and lambda-variable names, compared as ``spark.sql.caseSensitive``
+  says) plus its own action keys; a star, a regex column or a subquery
+  may read any column and gets a level of its own;
 - the rule chain runs as a narrow, shuffle-free chain of projections in
   one codegen stage.  Catalyst's ``CollapseProject`` merges consecutive
-  rules only while no rule reads an earlier rule's write more than once:
-  25 rules that each test and rewrite one column optimize to 26
-  ``Project`` nodes, and with plug details on every rule keeps its own
-  (each appends to the details column).  The reference needed checkpoint
-  cadence because per-rule temp views + UDF boundaries defeated fusion;
-  the cadence stays an opt-in knob for long chains
-  (``SparkPlug.scala:109-125``);
-- plug-details audit appends via ``concat(details, array(named_struct(...)))``
-  gated on ``condition AND any value actually changed`` using null-safe
-  equality (``PlugRule.scala:49-77``, ``SparkPlugUDFs.scala:14-31``);
+  levels only while no level reads an earlier level's write more than
+  once.  Measured over a checkpointed input, with plug details on: 20
+  rules that each test and rewrite their own column are one level and
+  optimize to 1 ``Project`` (20 as a fold of per-rule ``apply_rule``);
+  25 rules that each test and rewrite the same column are 25 levels and
+  25 ``Project`` nodes; the benchmark's 20-rule ``rules_deep`` chain is
+  13 levels and 13 ``Project`` nodes (20 as a per-rule fold).  The
+  reference needed checkpoint cadence because per-rule temp views + UDF
+  boundaries defeated fusion; the cadence stays an opt-in knob for long chains
+  (``SparkPlug.scala:109-125``), and a level ends where it fires;
+- plug-details audit appends ``array(named_struct(...))`` entries gated on
+  ``condition AND any value actually changed`` using null-safe equality
+  (``PlugRule.scala:49-77``, ``SparkPlugUDFs.scala:14-31``), one
+  ``concat`` per level with the entries in rule order;
 - changed-row metrics via ``DataFrame.observe`` — piggybacks on the caller's
   action instead of the reference's extra accumulator job
   (``SparkPlug.scala:52-62``).
@@ -39,6 +50,7 @@ raise unless ``lenient=True`` (reference silently wrote SQL ``null``).
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass, field, replace
 from functools import reduce
 from typing import Callable, Iterable, Sequence
@@ -46,6 +58,7 @@ from typing import Callable, Iterable, Sequence
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql import utils as sql_utils
 
 from .models import (
     DEFAULT_PLUG_DETAILS_COLUMN,
@@ -86,10 +99,12 @@ class PlugRuleValidationException(Exception):
 class CheckpointConfig:
     """Lineage-control cadence (reference ``SparkPlugCheckpointDetails``,
     ``SparkPlug.scala:14``, ``:109-125``).  The rule chain stays
-    shuffle-free, but a rule that reads an earlier rule's write more than
-    once (and every rule when plug details are on) adds one ``Project`` to
-    the plan, so very long rule pipelines at large scale can cut lineage
-    with this cadence."""
+    shuffle-free, but each level of rules that reads an earlier level's
+    write more than once adds one ``Project`` to the plan (a chain of rules
+    that all test and rewrite one column adds one per rule), so very long
+    rule pipelines at large scale can cut lineage with this cadence.  A
+    level ends where the cadence fires, so the repartitions and checkpoints
+    land after the same rules as in a per-rule fold."""
 
     checkpoint_dir: str
     rules_per_stage: int
@@ -204,25 +219,149 @@ def _literal_sql(value: str, data_type: T.DataType, lenient: bool) -> str:
     return f"CAST({v}L AS {ddl})"  # the integer types
 
 
+def _require_classic() -> None:
+    if sql_utils.is_remote():
+        raise RuntimeError(
+            "the rules engine needs a classic SparkSession (classic sessions "
+            "only): plug() and validate() parse rule SQL with the JVM "
+            "session's parser, which Spark Connect does not expose"
+        )
+
+
 def _parser(spark: SparkSession) -> Callable[[str], object]:
     """The session's SQL expression parser; raises ``ParseException``
     (``F.expr`` only parses when the plan is analyzed)."""
     return spark._jsparkSession.sessionState().sqlParser().parseExpression
 
 
-def _rule_columns(
+_EXPRESSIONS = "org.apache.spark.sql.catalyst.expressions."
+_ANALYSIS = "org.apache.spark.sql.catalyst.analysis."
+# parsed nodes that name a column; inside a lambda body the parser makes a
+# lambda variable of every plain name, an outer column included
+_NAMING = frozenset(
+    {_ANALYSIS + "UnresolvedAttribute", _EXPRESSIONS + "UnresolvedNamedLambdaVariable"}
+)
+# unresolved nodes that name no column; any other unresolved node (a star, a
+# regex column, IDENTIFIER(...)) may read any column, and so may a subquery
+_NAMELESS = frozenset(
+    _ANALYSIS + c for c in ("UnresolvedFunction", "UnresolvedExtractValue", "UnresolvedAlias")
+)
+_SUBQUERIES = frozenset(_EXPRESSIONS + c for c in ("ListQuery", "ScalarSubquery", "Exists"))
+
+
+def _names_read(tree) -> set[str] | None:
+    """Every part of every name a parsed fragment reads, each part split
+    again at ``", "`` (``toJSON`` prints name parts joined by it), so the
+    set holds a piece of every column the fragment reads; ``None`` when
+    the fragment may read any column.  One py4j call, no analysis (the
+    unresolved tree's ``references`` misses lambda bodies, stars and
+    subqueries)."""
+    try:
+        nodes = json.loads(tree.toJSON())
+    except Exception:  # noqa: BLE001 - a tree we cannot read reads anything
+        return None
+    names: set[str] = set()
+    todo = [nodes]
+    while todo:
+        node = todo.pop()
+        if isinstance(node, list):
+            todo.extend(node)
+            continue
+        if not isinstance(node, dict):
+            continue
+        todo.extend(node.values())  # the copies some nodes hold of children
+        cls = node.get("class")
+        if cls is None or cls in _NAMELESS:
+            continue
+        if cls in _NAMING:
+            parts = node.get("nameParts")
+            if not isinstance(parts, str) or parts[:1] + parts[-1:] != "[]" or (
+                parts.endswith(" more fields]")  # truncated
+            ):
+                return None
+            names.update(parts[1:-1].split(", "))
+        elif not isinstance(cls, str) or not cls.startswith(_EXPRESSIONS) or cls in _SUBQUERIES:
+            return None
+    return names
+
+
+def _fold_case(name: str) -> str:
+    """Each character as the lower case of its upper case (one character
+    each way), so names Spark's case-insensitive resolver equates (Java's
+    ``equalsIgnoreCase``) fold to one string."""
+    if name.isascii():
+        return name.lower()
+    return "".join((u if len(u := c.upper()) == 1 else c).lower()[0] for c in name)
+
+
+def _pieces(names: Iterable[str], fold: Callable[[str], str]) -> set[str]:
+    """``names`` folded and split at ``", "`` like :func:`_names_read`."""
+    return {p for n in names for p in fold(n).split(", ")}
+
+
+def _level_columns(
+    level: list[tuple[dict[str, str | Column], str, str | Column | None]],
+    details_column: str | None,
+    schema_ddl: str,
+) -> dict[str, Column]:
+    """ONE projection for a level of compiled rules: every rule's written
+    columns, and the details column with each rule's entry appended in rule
+    order, ``concat(<details>, CASE WHEN <gate> THEN array(<entry>) ELSE
+    <empty> END, ...)``."""
+    cols = {
+        name: F.expr(c) if isinstance(c, str) else c
+        for written, _, _ in level
+        for name, c in written.items()
+    }
+    if details_column is not None:
+        details, empty = _quote(details_column), f"CAST(array() AS {schema_ddl})"
+        if all(isinstance(entry, str) for _, _, entry in level):
+            cols[details_column] = F.expr(
+                f"concat({details}, "
+                + ", ".join(
+                    f"CASE WHEN {gate} THEN array({entry}) ELSE {empty} END"
+                    for _, gate, entry in level
+                )
+                + ")"
+            )
+        else:
+            cols[details_column] = F.concat(
+                F.expr(details),
+                *(
+                    F.when(F.expr(gate), F.array(entry)).otherwise(F.expr(empty))
+                    for _, gate, entry in level
+                ),
+            )
+    return cols
+
+
+def _apply_level(
+    df: DataFrame, level: list, details_column: str | None, schema_ddl: str
+) -> DataFrame:
+    """``df`` with a level applied in one ``withColumns``.  If that fails,
+    the level's rules are applied one by one, so the first failing rule
+    raises its own error, as it does in a per-rule fold."""
+    try:
+        return df.withColumns(_level_columns(level, details_column, schema_ddl))
+    except Exception:
+        for compiled in level:
+            df = df.withColumns(_level_columns([compiled], details_column, schema_ddl))
+        raise
+
+
+def _compile_rule(
     rule: PlugRule,
     fields: dict[str, T.DataType],
-    details_column: str | None,
-    entry_builder: Callable[[PlugRule], Column],
+    entry_builder: Callable[[PlugRule], Column] | None,
     keep_old_field: bool,
     lenient: bool,
     parse: Callable[[str], object],
-    alias_prefix: str | None = None,
-) -> dict[str, Column]:
-    """Compile ONE rule to its written top-level columns, each the reference's
-    generated ``select`` item (``PlugRule.scala:49-77``) as SQL text under
-    one ``F.expr``; every expression reads the rule's INPUT columns.
+) -> tuple[dict[str, str | Column], str, str | Column | None]:
+    """Compile ONE rule: its written top-level columns except the details
+    column, each the reference's generated ``select`` item
+    (``PlugRule.scala:49-77``) as SQL text that reads the rule's INPUT
+    columns; its change gate; and its details entry (``None`` without an
+    ``entry_builder``).
 
     A condition or backtick value is parsed ALONE first (``parse``), so a
     fragment such as ``a = 1) OR (b = 2`` raises instead of changing the
@@ -230,7 +369,6 @@ def _rule_columns(
     ends a trailing ``--`` comment.  Nested struct keys go through
     ``withField`` and a custom ``entry_builder`` keeps its ``Column``
     contract; both compose ``Column`` calls around the same SQL text.
-    With ``alias_prefix`` every column is named ``<alias_prefix><column>``.
     """
 
     def fragment(text: str) -> str:
@@ -303,16 +441,46 @@ def _rule_columns(
             # <updateKey>_<ruleName>_old (PlugRule.scala:83,153; README:186-194)
             out[f"{parent}_{rule.name}_old"] = _quote(parent)
 
+    gate = f"{cond} AND ({' OR '.join(gates) or 'false'})"
+    if entry_builder is None:
+        entry = None
+    elif entry_builder is default_details_entry:
+        names = ", ".join(_sql_string(k) for k in rule.field_names)
+        entry = (
+            f"named_struct('name', {_sql_string(rule.name)}, "
+            f"'version', {_sql_string(rule.version)}, "
+            f"'fieldNames', array({names}))"
+        )
+    else:
+        entry = entry_builder(rule)
+    return out, gate, entry
+
+
+def _rule_columns(
+    rule: PlugRule,
+    fields: dict[str, T.DataType],
+    details_column: str | None,
+    entry_builder: Callable[[PlugRule], Column],
+    keep_old_field: bool,
+    lenient: bool,
+    parse: Callable[[str], object],
+    alias_prefix: str | None = None,
+) -> dict[str, Column]:
+    """ONE rule's written top-level columns under one ``F.expr`` each (see
+    :func:`_compile_rule`), the details column included: every expression
+    reads the rule's INPUT columns.  With ``alias_prefix`` every column is
+    named ``<alias_prefix><column>``."""
+    out, gate, entry = _compile_rule(
+        rule,
+        fields,
+        entry_builder if details_column is not None else None,
+        keep_old_field,
+        lenient,
+        parse,
+    )
     if details_column is not None:
         details = _quote(details_column)
-        gate = f"{cond} AND ({' OR '.join(gates) or 'false'})"
-        if entry_builder is default_details_entry:
-            names = ", ".join(_sql_string(k) for k in rule.field_names)
-            entry = (
-                f"named_struct('name', {_sql_string(rule.name)}, "
-                f"'version', {_sql_string(rule.version)}, "
-                f"'fieldNames', array({names}))"
-            )
+        if isinstance(entry, str):
             out[details_column] = (
                 f"CASE WHEN {gate} THEN concat({details}, array({entry})) "
                 f"ELSE {details} END"
@@ -320,7 +488,7 @@ def _rule_columns(
         else:
             d = F.expr(details)
             out[details_column] = F.when(
-                F.expr(gate), F.concat(d, F.array(entry_builder(rule)))
+                F.expr(gate), F.concat(d, F.array(entry))
             ).otherwise(d)
 
     def column(name: str, c: str | Column) -> Column:
@@ -609,9 +777,11 @@ class SparkPlug:
         handles the retype — the reference validated the same way, and a
         rule set that only type-checks against a mid-fold schema is
         fragile by construction."""
+        _require_classic()
         return validate_rules(schema, list(rules), spark=self.spark)
 
     def plug(self, df: DataFrame, rules: Iterable[PlugRule]) -> DataFrame:
+        _require_classic()
         rules = list(rules)
         if self.validate_rules:
             errors = self.validate(df.schema, rules)
@@ -651,34 +821,87 @@ class SparkPlug:
         # plan — a driver-side O(rules^2) py4j tax on long chains).
         # EXPRESSION actions (backtick values) CAN retype a column, so
         # every path under such an action's top-level column is marked
-        # stale and the map is re-analyzed only when a later rule actually
+        # stale and re-read from the schema only when a later rule actually
         # touches a stale path — the common all-literal chain stays O(rules).
+        #
+        # Rules apply in LEVELS: maximal runs of consecutive rules in which
+        # no rule reads (its fragments, or its own action keys through the
+        # change gate and ELSE branch) or writes a column an earlier rule of
+        # the run writes.  Every rule of a level then reads the level's input
+        # exactly as it would read its own, so the level is one withColumns:
+        # one analysis and one Project, not one per rule.  A rule touching a
+        # path the pending level made stale reads that level's write, so it
+        # starts a new level; the map is re-read at that boundary.
+        pd = self.plug_details
+        details = pd.column if pd else None
+        parse = _parser(self.spark)
+        case_sensitive = self.spark.conf.get("spark.sql.caseSensitive") == "true"
+        fold = (lambda n: n) if case_sensitive else _fold_case
         fields = build_fields_map(out.schema)
-        stale: set[str] = set()
-        for i, rule in enumerate(rules):
-            if stale and any(
-                a.key in stale or a.update_key in stale for a in rule.actions
-            ):
-                fields = build_fields_map(out.schema)
-                stale.clear()
-            out = apply_rule(
-                out,
-                rule,
-                details_column=self.plug_details.column if self.plug_details else None,
-                details_entry_builder=(
-                    self.plug_details.entry_builder
-                    if self.plug_details
-                    else default_details_entry
-                ),
-                keep_old_field=self.keep_old_field_enabled,
-                lenient=self.lenient,
-                fields=fields,
+        stale: set[str] = set()  # stale paths written by applied levels
+        level: list = []  # compiled rules of the pending level
+        level_stale: set[str] = set()  # stale paths it writes
+        written: set[str] = set()  # what it writes, as _pieces
+
+        def flush() -> None:
+            nonlocal out
+            if level:
+                out = _apply_level(out, level, details, pd.schema_ddl if pd else "")
+                level.clear()
+                written.clear()
+                stale.update(level_stale)
+                level_stale.clear()
+
+        def touches(paths: set[str], rule: PlugRule) -> bool:
+            return bool(paths) and any(
+                a.key in paths or a.update_key in paths for a in rule.actions
             )
+
+        for i, rule in enumerate(rules):
+            if touches(level_stale, rule):
+                flush()
+            if touches(stale, rule):
+                # the applied plan has every stale path's type; the pending
+                # level's keep-old paths are not in it yet, so update in place
+                for p in stale:
+                    fields.pop(p, None)
+                fields.update(build_fields_map(out.schema))
+                stale.clear()
+            reads: set[str] | None = set()
+
+            def parse_and_read(text: str) -> None:
+                nonlocal reads
+                names = _names_read(parse(text))
+                reads = None if names is None or reads is None else reads | names
+
+            try:
+                compiled = _compile_rule(
+                    rule,
+                    fields,
+                    pd.entry_builder if pd else None,
+                    self.keep_old_field_enabled,
+                    self.lenient,
+                    parse_and_read,
+                )
+            except Exception:
+                flush()  # an earlier rule's analysis error comes first
+                raise
+            writes = _pieces(compiled[0], fold)
+            if reads is not None:
+                reads = _pieces(reads, fold) | _pieces(
+                    (a.update_key for a in rule.actions), fold
+                )
+            if reads is None or not written.isdisjoint(reads | writes):
+                flush()
+            level.append(compiled)
+            written.update(writes)
+            if details is not None:
+                written.update(_pieces([details], fold))
             for a in rule.actions:
                 if a.is_expression:
                     # the expression's result type is unknown without
                     # analysis; poison the whole top-level column subtree
-                    stale.update(
+                    level_stale.update(
                         p for p in fields if p == a.update_key
                         or p.startswith(a.update_key + ".")
                     )
@@ -693,9 +916,19 @@ class SparkPlug:
                         fields.update(
                             build_fields_map(fields[parent], prefix=f"{old}.")
                         )
-                    if parent in stale:
-                        stale.add(old)
-            out = self._repartition_and_checkpoint(out, i)
+                    if parent in level_stale:
+                        level_stale.add(old)
+            cadence = (
+                self.checkpoint is not None
+                and (i + 1) % self.checkpoint.rules_per_stage == 0
+            )
+            if reads is None or cadence:
+                # a rule that may read any column is a level of its own, and
+                # the cadence lands after the same rules as in a per-rule fold
+                flush()
+            if cadence:
+                out = self._repartition_and_checkpoint(out, i)
+        flush()
 
         return self._observe_metrics(out, df)
 

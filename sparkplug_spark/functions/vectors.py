@@ -56,6 +56,24 @@ def vec_dot(a: Column | str, b: Column | str) -> Column:
     return _dot(a, b)
 
 
+def _cosine_kernel():
+    """Pandas UDF: per row, the dot product of two vectors over the product
+    of their norms, 0.0 where that product is 0.0; the same float
+    operations as ``vec_dot`` over ``vec_norm`` products, in one pass."""
+
+    @F.pandas_udf(T.DoubleType())
+    def _cosine(x: pd.Series, y: pd.Series) -> pd.Series:
+        if len(x) == 0:
+            return pd.Series([], dtype="float64")
+        a, b = _mat(x), _mat(y)
+        denom = np.sqrt(np.einsum("ij,ij->i", a, a)) * np.sqrt(np.einsum("ij,ij->i", b, b))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cosine = np.einsum("ij,ij->i", a, b) / denom
+        return pd.Series(np.where(denom == 0.0, 0.0, cosine))
+
+    return _cosine
+
+
 def vec_norm(a: Column | str) -> Column:
     """Batch L2 norm via numpy (Arrow-vectorized)."""
 

@@ -472,7 +472,7 @@ def embedding_near_dup_pairs(
     exact cosine verification (Arrow-batched numpy dot).
     ``brute_force=True`` compares all pairs exactly via the blocked-GEMM
     plan (:func:`~.similarity.blocked_cosine_pairs`)."""
-    from ..functions.vectors import infer_dim, vec_dot, vec_norm
+    from ..functions.vectors import infer_dim
     from .similarity import _hyperplanes, banded_signature_entries, blocked_cosine_pairs
 
     if brute_force:
@@ -502,35 +502,21 @@ def _verify_bucket_candidates(
     release: bool,
 ) -> DataFrame:
     """Shared verify stage for hyperplane-bucketed pair generation:
-    same-(band, bucket) candidates with id_a < id_b, exact cosine via the
-    Arrow dot kernel, 6dp rounding, threshold filter.  ``entries`` must
-    already be persisted (both self-join sides consume it)."""
-    from ..functions.vectors import vec_dot, vec_norm
+    same-(band, bucket) candidates with id_a < id_b, exact cosine via one
+    Arrow kernel, 6dp rounding, threshold filter.  ``entries`` must
+    already be persisted (both self-join sides consume it).  One kernel
+    computes each candidate's cosine, norms included, so no kernel runs
+    over the vectors on each join side; it is marked nondeterministic so
+    the optimizer cannot copy it into the threshold filter it would
+    otherwise push below the projection."""
+    from ..functions.vectors import _cosine_kernel
 
     cand = same_key_pairs(entries, ["band", "bucket"]).distinct()
-    vecs = spread(df).select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        vec_norm(F.col(vec_col)).alias("n"),
-    )
-    cand = (
-        cand.join(
-            vecs.select(
-                F.col("id").alias("id_a"), F.col("v").alias("v_a"), F.col("n").alias("n_a")
-            ),
-            "id_a",
-        )
-        .join(
-            vecs.select(
-                F.col("id").alias("id_b"), F.col("v").alias("v_b"), F.col("n").alias("n_b")
-            ),
-            "id_b",
-        )
-    )
-    denom = F.col("n_a") * F.col("n_b")
-    cosine = F.when(denom == 0.0, F.lit(0.0)).otherwise(
-        vec_dot("v_a", "v_b") / denom
-    )
+    vecs = spread(df).select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    cand = cand.join(
+        vecs.select(F.col("id").alias("id_a"), F.col("v").alias("v_a")), "id_a"
+    ).join(vecs.select(F.col("id").alias("id_b"), F.col("v").alias("v_b")), "id_b")
+    cosine = _cosine_kernel().asNondeterministic()("v_a", "v_b")
     out = (
         cand.select("id_a", "id_b", F.round(cosine, 6).alias("cosine"))
         .filter(F.col("cosine") >= threshold)

@@ -4,6 +4,8 @@ exactly its result's block persisted and stays within a Spark job budget
 on one small fixed corpus; the capped Jaccard and containment tiers never
 score a pair above its true value."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,6 +18,7 @@ from sparkplug_spark.operators import (
     dhash_pairs,
     edit_distance_pairs,
     embedding_near_dup_pairs,
+    embedding_near_dup_pairs_frozen,
     jaccard_ngram_pairs,
     jaccard_prefix_pairs,
     minhash_lsh_join,
@@ -188,3 +191,23 @@ def test_capped_containment_never_exceeds_true_score(spark):
     # doc 2 is wholly inside doc 1 (containment 1.0); doc 1 in doc 2 is
     # only 2/7, and stays under the threshold
     assert got == [(2, 1, 1.0)]
+
+
+@pytest.mark.parametrize(
+    "op", [embedding_near_dup_pairs, embedding_near_dup_pairs_frozen],
+    ids=lambda op: op.__name__,
+)
+def test_embedding_verify_runs_its_kernel_once(spark, op):
+    """One ``ArrowEvalPython`` node (one output id) evaluates the
+    candidates' cosines, and no kernel runs over the vectors on the join
+    sides; the bucket kernel belongs to the cached entries."""
+    before = _persisted(spark)
+    spark.conf.set("spark.sparkplug.release.enabled", "false")  # lazy plan
+    try:
+        plan = op(_vectors(spark), threshold=0.9)._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.unset("spark.sparkplug.release.enabled")
+        _free(spark, _persisted(spark) - before)
+        spark.catalog.clearCache()
+    nodes = set(re.findall(r"ArrowEvalPython \[(\w+)\(.*?\], \[(pythonUDF\d+#\d+)\]", plan))
+    assert sorted(k for k, _ in nodes if k != "_buckets") == ["_cosine"], nodes

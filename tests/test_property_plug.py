@@ -106,3 +106,94 @@ def test_plug_matches_pandas_reference(spark, rows, raw_rules):
     )
     got["qty"] = got["qty"].astype("float64")
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+
+# -- levels: the fused fold against the per-rule apply_rule fold ----------
+
+INTS = [f"c{k}" for k in range(5)]
+
+level_rule_st = st.tuples(
+    # condition: kind, column, constant
+    st.sampled_from(["gt", "even", "details", "old", "true"]),
+    st.sampled_from(INTS),
+    st.integers(min_value=-1, max_value=6),
+    # 1-2 actions: column, value kind, column read by the value, constant
+    st.lists(
+        st.tuples(
+            st.sampled_from(INTS),
+            st.sampled_from(["lit", "add", "lambda"]),
+            st.sampled_from(INTS),
+            st.integers(min_value=0, max_value=6),
+        ),
+        min_size=1,
+        max_size=2,
+        unique_by=lambda a: a[0],
+    ),
+)
+
+# value kinds: a literal, an expression, a lambda whose body reads a column
+VALUES = {
+    "lit": lambda src, n: str(n),
+    "add": lambda src, n: f"`{src} + {n}`",
+    "lambda": lambda src, n: f"`transform(array({n}), x -> x + {src})[0]`",
+}
+
+
+def _level_rules(raw):
+    """PlugRules from drawn specs; five shared columns, so adjacent rules
+    are often independent (one level) and often not."""
+    rules = []
+    for i, (kind, col, k, actions) in enumerate(raw):
+        if kind == "old" and rules:
+            prev = rules[-1]
+            cond = f"{prev.actions[0].key}_{prev.name}_old > {k}"
+        else:
+            cond = {
+                "gt": f"{col} > {k}",
+                "even": f"{col} % 2 = 0",
+                "details": f"size(plugDetails) > {k % 2}",
+            }.get(kind, "true")
+        rules.append(
+            PlugRule(
+                f"r{i}", "v1", cond,
+                tuple(PlugAction(key, VALUES[v](src, n)) for key, v, src, n in actions),
+            )
+        )
+    return rules
+
+
+@settings(max_examples=15, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(
+    rows=st.lists(
+        st.tuples(*[st.one_of(st.none(), st.integers(-3, 8)) for _ in INTS]),
+        min_size=1,
+        max_size=6,
+    ),
+    raw_rules=st.lists(level_rule_st, min_size=1, max_size=6),
+)
+def test_level_fold_matches_per_rule_fold(spark, rows, raw_rules):
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    from sparkplug_spark import apply_rule
+    from sparkplug_spark.models import DEFAULT_PLUG_DETAILS_COLUMN as DETAILS
+    from sparkplug_spark.models import PLUG_DETAILS_SCHEMA_DDL
+
+    rules = _level_rules(raw_rules)
+    df = spark.createDataFrame(rows, ", ".join(f"{c} int" for c in INTS))
+    obs = Observation("levels")
+    got = (
+        SparkPlug.builder(spark).enable_plug_details().enable_metrics(obs)
+        .keep_old_field().create().plug(df, rules)
+    )
+    want = df.withColumn(DETAILS, F.array().cast(PLUG_DETAILS_SCHEMA_DDL))
+    for r in rules:
+        want = apply_rule(want, r, details_column=DETAILS, keep_old_field=True)
+    assert got.schema == want.schema
+    want_rows = sorted(want.collect(), key=repr)
+    assert sorted(got.collect(), key=repr) == want_rows
+    assert obs.get == {
+        "changed": sum(len(r[DETAILS]) > 0 for r in want_rows),
+        "total": len(rows),
+    }
